@@ -1,18 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // see GraftSession: keep collect_list aggregates hash-based
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus)
     // Warm the JVM/codegen/parquet-footer paths before timing so
     // measured queries aren't charged one-time compilation: every
     // query runs once at the smallest available sf (whole-stage
@@ -53,9 +44,11 @@ object Bench {
     try {
       spark.range(1000000L).selectExpr("sum(id)").collect()
       if (warmSibling.isDirectory)
-        SparkEntry.queries.values
-          .foreach(fn => try fn(spark, warmSibling.getPath).count()
-                         catch { case _: Throwable => () })
+        SparkEntry.queries.foreach { case (name, fn) =>
+          try fn(spark, warmSibling.getPath).count()
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] warm $name failed: $e") }
+        }
       else
         // no small sibling: a full-suite warm pass would silently run
         // every query once AT MEASUREMENT SCALE and ~double wall time,
@@ -63,7 +56,8 @@ object Bench {
         System.err.println(
           s"[bench] no sf0.001 sibling next to $sfDir — skipping " +
             "full-suite codegen warm pass (JVM-only warm-up)")
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] warm-up failed: $e") }
     // dev knobs: SPARK_GRAFT_QUERIES comma-list filters the set;
     // SPARK_GRAFT_REPS repeats each query and keeps the per-query
     // minimum. Default is min-of-2: measured external host draw
@@ -94,7 +88,8 @@ object Bench {
         val times = (1 to reps).map { _ =>
           val t0 = System.nanoTime()
           val ok = try { fn(spark, sfDir).count(); true }
-                   catch { case _: Throwable => false }
+                   catch { case e: Throwable =>
+                     System.err.println(s"[bench] $name failed: $e"); false }
           if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
         }
         name -> (if (times.contains(-1.0)) -1.0 else times.min)

@@ -1,10 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{Bigrams, BigramsAll, ByteStats, CorrMomentsAgg, CosineScan, CosineScanScored, CountInSet, DotProduct, GramAgg, Int8DotBytes, Int8Pack, Int8Quantize, IntersectCount, MinHash32, MinHashAgg, MisraGriesAgg, PackedPairs, PairCombinations, Phash60, PortableMinHash16, PortableSimHash60, PortableTokenHash, Shingle3, ShingleHash3, SimHash64, TopKAgg, ZOrderExpr}
+import graft.functions.GraftFunctions
 
 /** SparkSessionExtensions entry point: makes the engine's native
   * expressions first-class SQL functions in any session built with
@@ -16,116 +14,11 @@ import graft.functions.{Bigrams, BigramsAll, ByteStats, CorrMomentsAgg, CosineSc
   * }}}
   *
   * so pure-SQL users get `graft_dot(a, b)` / `graft_simhash64(hs)`
-  * without touching the Scala API (`VectorExprs` registers the same
-  * builders per-session for DataFrame callers).
+  * without touching the Scala API. The set is [[GraftFunctions.all]],
+  * the same table `GraftSession.registerAll` installs from.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def inject(
-      e: SparkSessionExtensions,
-      name: String,
-      usage: String,
-      arity: Int,
-      clazz: Class[_],
-      build: Seq[Expression] => Expression): Unit =
-    e.injectFunction((
-      new FunctionIdentifier(name),
-      new ExpressionInfo(clazz.getName, name),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == arity,
-          s"$usage takes $arity argument(s), got ${exprs.length}")
-        build(exprs)
-      }))
-
-  override def apply(e: SparkSessionExtensions): Unit = {
-    // The COMPLETE graft function set. Every name the Scala-side
-    // register() helpers expose must be injected here too: the
-    // per-session helpers guard per-name, but a session whose only
-    // registration path is spark.sql.extensions gets exactly this list.
-    inject(e, "graft_dot", "graft_dot(array<float>, array<float>)", 2,
-      classOf[DotProduct], exprs => DotProduct(exprs(0), exprs(1)))
-    inject(e, "graft_cosine_scan",
-      "graft_cosine_scan(array<float>, double, bigint, " +
-        "array<struct>, int, double)", 6,
-      classOf[CosineScan], exprs => CosineScan(exprs(0), exprs(1),
-        exprs(2), exprs(3), exprs(4), exprs(5)))
-    inject(e, "graft_cosine_scan_scored",
-      "graft_cosine_scan_scored(array<float>, double, bigint, " +
-        "array<struct>, int)", 5,
-      classOf[CosineScanScored], exprs => CosineScanScored(exprs(0),
-        exprs(1), exprs(2), exprs(3), exprs(4)))
-    inject(e, "graft_simhash64", "graft_simhash64(array<bigint>)", 1,
-      classOf[SimHash64], exprs => SimHash64(exprs.head))
-    inject(e, "graft_simhash60_portable",
-      "graft_simhash60_portable(array<bigint>)", 1,
-      classOf[PortableSimHash60], exprs => PortableSimHash60(exprs.head))
-    inject(e, "graft_shingle3", "graft_shingle3(array<string>)", 1,
-      classOf[Shingle3], exprs => Shingle3(exprs.head))
-    inject(e, "graft_minhash32_arr", "graft_minhash32_arr(array<string>)", 1,
-      classOf[MinHash32], exprs => MinHash32(exprs.head))
-    inject(e, "graft_minhash32", "graft_minhash32(bigint)", 1,
-      classOf[MinHashAgg], exprs => MinHashAgg(exprs.head).toAggregateExpression())
-    inject(e, "graft_pairs", "graft_pairs(array<bigint>)", 1,
-      classOf[PairCombinations], exprs => PairCombinations(exprs.head))
-    inject(e, "graft_count_in_set",
-      "graft_count_in_set(array<string>, array<string>)", 2,
-      classOf[CountInSet], exprs => CountInSet(exprs(0), exprs(1)))
-    inject(e, "graft_shingle_hash3", "graft_shingle_hash3(array<string>)", 1,
-      classOf[ShingleHash3], exprs => ShingleHash3(exprs.head))
-    inject(e, "graft_packed_pairs", "graft_packed_pairs(array<bigint>)", 1,
-      classOf[PackedPairs], exprs => PackedPairs(exprs.head))
-    inject(e, "graft_minhash16_portable",
-      "graft_minhash16_portable(array<bigint>)", 1,
-      classOf[PortableMinHash16], exprs => PortableMinHash16(exprs.head))
-    inject(e, "graft_token_hash_portable",
-      "graft_token_hash_portable(array<string>)", 1,
-      classOf[PortableTokenHash], exprs => PortableTokenHash(exprs.head))
-    inject(e, "graft_bigrams", "graft_bigrams(array<string>)", 1,
-      classOf[Bigrams], exprs => Bigrams(exprs.head))
-    inject(e, "graft_bigrams_all", "graft_bigrams_all(array<string>)", 1,
-      classOf[BigramsAll], exprs => BigramsAll(exprs.head))
-    inject(e, "graft_zorder", "graft_zorder(bigint, bigint)", 2,
-      classOf[ZOrderExpr], exprs => ZOrderExpr(exprs(0), exprs(1)))
-    inject(e, "graft_mg", "graft_mg(key, capacity)", 2,
-      classOf[MisraGriesAgg],
-      exprs => MisraGriesAgg(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue())
-        .toAggregateExpression())
-    inject(e, "graft_byte_stats", "graft_byte_stats(binary)", 1,
-      classOf[ByteStats], exprs => ByteStats(exprs.head))
-    inject(e, "graft_phash60", "graft_phash60(binary)", 1,
-      classOf[Phash60], exprs => Phash60(exprs.head))
-    inject(e, "graft_intersect_count",
-      "graft_intersect_count(array<bigint>, array<bigint>)", 2,
-      classOf[IntersectCount], exprs => IntersectCount(exprs(0), exprs(1)))
-    inject(e, "graft_int8_quantize", "graft_int8_quantize(array<float>)", 1,
-      classOf[Int8Quantize], exprs => Int8Quantize(exprs.head))
-    inject(e, "graft_int8_pack", "graft_int8_pack(array<float>)", 1,
-      classOf[Int8Pack], exprs => Int8Pack(exprs.head))
-    inject(e, "graft_int8_dot", "graft_int8_dot(binary, binary)", 2,
-      classOf[Int8DotBytes], exprs => Int8DotBytes(exprs(0), exprs(1)))
-    inject(e, "graft_topk", "graft_topk(score, id, k)", 3,
-      classOf[TopKAgg], exprs => TopKAgg(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Number].intValue())
-        .toAggregateExpression())
-    inject(e, "graft_gram_agg", "graft_gram_agg(array<float>)", 1,
-      classOf[GramAgg], exprs => GramAgg(exprs.head).toAggregateExpression())
-    inject(e, "graft_corr_moments",
-      "graft_corr_moments(double, double, double, double)", 4,
-      classOf[CorrMomentsAgg],
-      exprs => CorrMomentsAgg(exprs).toAggregateExpression())
-    // Spark's own Bloom expressions, surfaced under graft names (they
-    // ship unregistered — Catalyst only builds them inside runtime
-    // filter rules)
-    inject(e, "graft_bloom_agg", "graft_bloom_agg(bigint, est, numBits)", 3,
-      classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate],
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-        .toAggregateExpression())
-    inject(e, "graft_bloom_might_contain",
-      "graft_bloom_might_contain(binary, bigint)", 2,
-      classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain],
-      exprs => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1)))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftFunctions.all.foreach(f =>
+      e.injectFunction((f.identifier, f.info, f.builder _)))
 }

@@ -26,28 +26,18 @@ object GraftSession {
         "4000000")
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
 
-  /** Register every graft SQL function family imperatively —
-    * idempotent per name. The safety net for sessions where the
-    * extensions config cannot apply (getOrCreate over an existing
-    * SparkContext freezes static confs): without it, SQL callers
-    * would only see a function after some DataFrame operator happened
-    * to register its family.
+  /** Install every graft SQL function imperatively — idempotent per
+    * name, from the same table `GraftExtensions` injects. The safety
+    * net for sessions where the extensions config cannot apply
+    * (getOrCreate over an existing SparkContext freezes static
+    * confs).
     */
-  def registerAll(s: SparkSession): Unit = {
-    graft.functions.VectorExprs.register(s)
-    graft.functions.TextExprs.register(s)
-    graft.functions.MinHashAgg.register(s)
-    graft.functions.TopKAgg.register(s)
-    graft.functions.GramAgg.register(s)
-    graft.functions.CorrMomentsAgg.register(s)
-    graft.functions.BloomFns.register(s)
-    graft.functions.MisraGriesAgg.register(s)
-    graft.functions.ZOrderExpr.register(s)
-  }
+  def registerAll(s: SparkSession): Unit =
+    graft.functions.GraftFunctions.all.foreach(_.install(s))
 
-  /** Local session for tests/demos. Functions are also registered
-    * imperatively: `getOrCreate` may return a pre-existing session
-    * whose extensions config is frozen, and registration is
+  /** Local session for mains, tests and demos. Functions are also
+    * registered imperatively: `getOrCreate` may return a pre-existing
+    * session whose extensions config is frozen, and registration is
     * idempotent.
     */
   def local(cores: Int = 4): SparkSession = {

@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.functions.call_function
 
 /** Session wrappers over Spark's own Bloom-filter expressions
   * (`BloomFilterAggregate` / `BloomFilterMightContain` — the machinery
@@ -13,30 +10,19 @@ import org.apache.spark.sql.functions.call_function
   * of a per-row UDF over `util.sketch.BloomFilter`.
   */
 object BloomFns {
-  def register(s: SparkSession): Unit = {
-    Registration.registerOnce(s, "graft_bloom_agg",
-      exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)))
-    Registration.registerOnce(s, "graft_bloom_might_contain",
-      exprs => BloomFilterMightContain(exprs(0), exprs(1)))
-  }
-
   /** Aggregate a LONG column into a serialized Bloom filter (BINARY).
     * `est` sizes the expected item count, `numBits` the bit array —
     * both must be literals (plan-time constants).
     */
   def bloomAgg(s: SparkSession, digests: Column, est: Column,
-      numBits: Column): Column = {
-    register(s)
-    call_function("graft_bloom_agg", digests, est, numBits)
-  }
+      numBits: Column): Column =
+    GraftFunctions.bloomAgg(s, digests, est, numBits)
 
   /** Membership probe of a LONG value against a serialized Bloom
     * filter. `bloom` must fold to a constant (a collected sketch
     * literal or scalar subquery) — Spark evaluates it once per plan,
     * not per row.
     */
-  def mightContain(s: SparkSession, bloom: Column, value: Column): Column = {
-    register(s)
-    call_function("graft_bloom_might_contain", bloom, value)
-  }
+  def mightContain(s: SparkSession, bloom: Column, value: Column): Column =
+    GraftFunctions.bloomMightContain(s, bloom, value)
 }

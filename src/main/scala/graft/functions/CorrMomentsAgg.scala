@@ -9,7 +9,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType,
   StructField, StructType}
 
@@ -205,15 +204,8 @@ object CorrMomentsAgg {
     StructField("p", ArrayType(DoubleType, containsNull = false),
       nullable = false)))
 
-  def register(s: SparkSession): Unit = {
-    Registration.registerOnce(s, "graft_corr_moments",
-      exprs => CorrMomentsAgg(exprs).toAggregateExpression())
-  }
-
   /** Aggregate column over four double measure columns. */
   def corrMoments(s: SparkSession, m1: Column, m2: Column, m3: Column,
-      m4: Column): Column = {
-    register(s)
-    call_function("graft_corr_moments", m1, m2, m3, m4)
-  }
+      m4: Column): Column =
+    GraftFunctions.corrMoments(s, m1, m2, m3, m4)
 }

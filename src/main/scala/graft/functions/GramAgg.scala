@@ -8,7 +8,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType,
   LongType, StructField, StructType}
 
@@ -177,14 +176,7 @@ object GramAgg {
       StructField("v", LongType, nullable = false))),
       containsNull = false), nullable = false)))
 
-  def register(s: SparkSession): Unit = {
-    Registration.registerOnce(s, "graft_gram_agg",
-      exprs => GramAgg(exprs.head).toAggregateExpression())
-  }
-
   /** Aggregate column over an `array<float>` embedding column. */
-  def gramAgg(s: SparkSession, emb: Column): Column = {
-    register(s)
-    call_function("graft_gram_agg", emb)
-  }
+  def gramAgg(s: SparkSession, emb: Column): Column =
+    GraftFunctions.gramAgg(s, emb)
 }

@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** MinHash signature sketch as a `TypedImperativeAggregate` (SURVEY §7
@@ -146,26 +145,14 @@ object MinHash32 {
     new GenericArrayData(out)
   }
 
-  def minhash32FromSet(s: SparkSession, shingles: Column): Column = {
-    MinHashAgg.register(s)
-    call_function("graft_minhash32_arr", shingles)
-  }
+  def minhash32FromSet(s: SparkSession, shingles: Column): Column =
+    GraftFunctions.minhash32Arr(s, shingles)
 }
 
 object MinHashAgg {
-  def register(s: SparkSession): Unit = {
-    // per-name guards — see Registration.registerOnce
-    Registration.registerOnce(s, "graft_minhash32",
-      exprs => MinHashAgg(exprs.head).toAggregateExpression())
-    Registration.registerOnce(s, "graft_minhash32_arr",
-      exprs => MinHash32(exprs.head))
-  }
-
   /** Aggregate column: 32-long MinHash signature of a LongType hash
     * column.
     */
-  def minhash32(s: SparkSession, hashCol: Column): Column = {
-    register(s)
-    call_function("graft_minhash32", hashCol)
-  }
+  def minhash32(s: SparkSession, hashCol: Column): Column =
+    GraftFunctions.minhash32(s, hashCol)
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType,
   StructField, StructType}
 
@@ -130,17 +130,9 @@ object MisraGriesAgg {
     StructField("cnt", LongType, nullable = false))),
     containsNull = false)
 
-  def register(s: SparkSession): Unit =
-    Registration.registerOnce(s, "graft_mg",
-      exprs => MisraGriesAgg(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue())
-        .toAggregateExpression())
-
   /** Aggregate column: ARRAY<STRUCT<key, cnt>> summary ordered
     * (cnt desc, key asc), at most `capacity` entries.
     */
-  def mg(s: SparkSession, key: Column, capacity: Int): Column = {
-    register(s)
-    call_function("graft_mg", key, lit(capacity))
-  }
+  def mg(s: SparkSession, key: Column, capacity: Int): Column =
+    GraftFunctions.mg(s, key, lit(capacity))
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -70,10 +69,8 @@ object Shingle3 {
 
   def compute(toks: ArrayData): GenericArrayData = computeN(toks, 3)
 
-  def shingle3(s: SparkSession, tokens: Column): Column = {
-    TextExprs.register(s)
-    call_function("graft_shingle3", tokens)
-  }
+  def shingle3(s: SparkSession, tokens: Column): Column =
+    GraftFunctions.shingle3(s, tokens)
 }
 
 /** Distinct 2-gram (bigram) strings of a token array — the compiled
@@ -98,10 +95,8 @@ case class Bigrams(child: Expression) extends UnaryExpression {
 object Bigrams {
   def compute(toks: ArrayData): GenericArrayData = Shingle3.computeN(toks, 2)
 
-  def bigrams(s: SparkSession, tokens: Column): Column = {
-    TextExprs.register(s)
-    call_function("graft_bigrams", tokens)
-  }
+  def bigrams(s: SparkSession, tokens: Column): Column =
+    GraftFunctions.bigrams(s, tokens)
 }
 
 /** ALL adjacent bigram occurrences, space-joined, in document order —
@@ -141,10 +136,8 @@ object BigramsAll {
     new GenericArrayData(out)
   }
 
-  def bigramsAll(s: SparkSession, tokens: Column): Column = {
-    TextExprs.register(s)
-    call_function("graft_bigrams_all", tokens)
-  }
+  def bigramsAll(s: SparkSession, tokens: Column): Column =
+    GraftFunctions.bigramsAll(s, tokens)
 }
 
 /** Distinct 3-token shingles as 64-bit XXH64 hashes (seed 42 — the
@@ -196,10 +189,8 @@ object ShingleHash3 {
     new GenericArrayData(out)
   }
 
-  def shingleHash3(s: SparkSession, tokens: Column): Column = {
-    TextExprs.register(s)
-    call_function("graft_shingle_hash3", tokens)
-  }
+  def shingleHash3(s: SparkSession, tokens: Column): Column =
+    GraftFunctions.shingleHash3(s, tokens)
 }
 
 /** The portable 16-permutation MinHash signature of a token-hash
@@ -269,10 +260,8 @@ object PortableMinHash16 {
     new GenericArrayData(out)
   }
 
-  def minhash16Portable(s: SparkSession, tokenHashes: Column): Column = {
-    TextExprs.register(s)
-    call_function("graft_minhash16_portable", tokenHashes)
-  }
+  def minhash16Portable(s: SparkSession, tokenHashes: Column): Column =
+    GraftFunctions.minhash16Portable(s, tokenHashes)
 }
 
 /** The portable per-token hash array of a token-string array, in one
@@ -339,10 +328,8 @@ object PortableTokenHash {
     new GenericArrayData(out)
   }
 
-  def tokenHashPortable(s: SparkSession, tokens: Column): Column = {
-    TextExprs.register(s)
-    call_function("graft_token_hash_portable", tokens)
-  }
+  def tokenHashPortable(s: SparkSession, tokens: Column): Column =
+    GraftFunctions.tokenHashPortable(s, tokens)
 
   /** The same per-token hash for a driver-side literal — probe
     * tokens baked into streaming plans (S17) and test replays share
@@ -423,10 +410,8 @@ object PackedPairs {
     new GenericArrayData(out)
   }
 
-  def packedPairs(s: SparkSession, ids: Column): Column = {
-    TextExprs.register(s)
-    call_function("graft_packed_pairs", ids)
-  }
+  def packedPairs(s: SparkSession, ids: Column): Column =
+    GraftFunctions.packedPairs(s, ids)
 }
 
 /** All C(k,2) ordered index pairs of a (sorted) id array, as an
@@ -481,10 +466,8 @@ object PairCombinations {
     new GenericArrayData(out)
   }
 
-  def pairs(s: SparkSession, sortedIds: Column): Column = {
-    TextExprs.register(s)
-    call_function("graft_pairs", sortedIds)
-  }
+  def pairs(s: SparkSession, sortedIds: Column): Column =
+    GraftFunctions.pairs(s, sortedIds)
 }
 
 /** Count of array elements that belong to a (small) reference set —
@@ -534,11 +517,9 @@ object CountInSet {
     cnt
   }
 
-  def countInSet(s: SparkSession, arr: Column, set: Seq[String]): Column = {
-    TextExprs.register(s)
-    call_function("graft_count_in_set", arr,
+  def countInSet(s: SparkSession, arr: Column, set: Seq[String]): Column =
+    GraftFunctions.countInSet(s, arr,
       org.apache.spark.sql.functions.typedLit(set))
-  }
 }
 
 /** Exact intersection cardinality of two BIGINT-array SETS in one
@@ -616,10 +597,8 @@ object IntersectCount {
       mergeCount(x.length, y.length, x(_), y(_))
     }
 
-  def intersectCount(s: SparkSession, a: Column, b: Column): Column = {
-    TextExprs.register(s)
-    call_function("graft_intersect_count", a, b)
-  }
+  def intersectCount(s: SparkSession, a: Column, b: Column): Column =
+    GraftFunctions.intersectCount(s, a, b)
 }
 
 object TextExprs {
@@ -637,47 +616,4 @@ object TextExprs {
           s"$name requires array<bigint>, got ${other.catalogString}")
     }
 
-  def register(s: SparkSession): Unit = {
-    // Guard each name individually: a session built via GraftExtensions
-    // already has graft_shingle3 injected but not the other two, so a
-    // single shared guard would short-circuit and leave graft_pairs /
-    // graft_count_in_set unresolvable on the canonical entry point.
-    Registration.registerOnce(s, "graft_shingle3",
-      exprs => Shingle3(exprs.head))
-    Registration.registerOnce(s, "graft_pairs",
-      exprs => PairCombinations(exprs.head))
-    Registration.registerOnce(s, "graft_shingle_hash3",
-      exprs => ShingleHash3(exprs.head))
-    Registration.registerOnce(s, "graft_packed_pairs",
-      exprs => PackedPairs(exprs.head))
-    Registration.registerOnce(s, "graft_minhash16_portable",
-      exprs => PortableMinHash16(exprs.head))
-    Registration.registerOnce(s, "graft_token_hash_portable",
-      exprs => PortableTokenHash(exprs.head))
-    Registration.registerOnce(s, "graft_bigrams",
-      exprs => Bigrams(exprs.head))
-    Registration.registerOnce(s, "graft_bigrams_all",
-      exprs => BigramsAll(exprs.head))
-    Registration.registerOnce(s, "graft_count_in_set",
-      exprs => CountInSet(exprs(0), exprs(1)))
-    Registration.registerOnce(s, "graft_intersect_count",
-      exprs => IntersectCount(exprs(0), exprs(1)))
-  }
-}
-
-/** Per-name register-once helper shared by all graft function families.
-  * `createOrReplaceTempFunction` logs a replace warning on every call,
-  * so each name is guarded by its own `functionExists` probe — never a
-  * sibling's (extension-injected sessions carry partial overlap).
-  */
-object Registration {
-  def registerOnce(
-      s: SparkSession,
-      name: String,
-      builder: Seq[Expression] => Expression): Unit = {
-    val reg = s.sessionState.functionRegistry
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name))) {
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-  }
 }

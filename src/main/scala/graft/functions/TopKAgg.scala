@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType,
   StructField, StructType}
 
@@ -113,20 +113,9 @@ object TopKAgg {
     StructField("score", DoubleType, nullable = false))),
     containsNull = false)
 
-  def register(s: SparkSession): Unit = {
-    // per-name guards — see Registration.registerOnce; k arrives as a
-    // foldable literal (the SQL form is graft_topk(score, id, k))
-    Registration.registerOnce(s, "graft_topk",
-      exprs => TopKAgg(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Number].intValue())
-        .toAggregateExpression())
-  }
-
   /** Aggregate column: ranked ARRAY<STRUCT<vec_id, score>> of the k
     * best (score desc, id asc) entries per group.
     */
-  def topk(s: SparkSession, score: Column, id: Column, k: Int): Column = {
-    register(s)
-    call_function("graft_topk", score, id, lit(k))
-  }
+  def topk(s: SparkSession, score: Column, id: Column, k: Int): Column =
+    GraftFunctions.topk(s, score, id, lit(k))
 }

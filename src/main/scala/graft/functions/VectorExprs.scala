@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /** Native Catalyst expressions for the vector hot paths.
@@ -184,10 +183,8 @@ object PortableSimHash60 {
     sig
   }
 
-  def simhash60Portable(s: SparkSession, tokenHashes: Column): Column = {
-    VectorExprs.register(s)
-    call_function("graft_simhash60_portable", tokenHashes)
-  }
+  def simhash60Portable(s: SparkSession, tokenHashes: Column): Column =
+    GraftFunctions.simhash60Portable(s, tokenHashes)
 }
 
 /** Byte-level feature stats of a binary payload in one compiled pass:
@@ -289,10 +286,8 @@ object Phash60 {
     sig
   }
 
-  def phash60(s: SparkSession, payload: Column): Column = {
-    VectorExprs.register(s)
-    call_function("graft_phash60", payload)
-  }
+  def phash60(s: SparkSession, payload: Column): Column =
+    GraftFunctions.phash60(s, payload)
 }
 
 object ByteStats {
@@ -319,10 +314,8 @@ object ByteStats {
       Array[Any](n, sum, new org.apache.spark.sql.catalyst.util.GenericArrayData(frames)))
   }
 
-  def byteStats(s: SparkSession, payload: Column): Column = {
-    VectorExprs.register(s)
-    call_function("graft_byte_stats", payload)
-  }
+  def byteStats(s: SparkSession, payload: Column): Column =
+    GraftFunctions.byteStats(s, payload)
 }
 
 /** Per-vector int8 symmetric quantization in one compiled pass:
@@ -408,10 +401,8 @@ object Int8Quantize {
           .fromPrimitiveArray(q)))
   }
 
-  def int8Quantize(s: SparkSession, emb: Column): Column = {
-    VectorExprs.register(s)
-    call_function("graft_int8_quantize", emb)
-  }
+  def int8Quantize(s: SparkSession, emb: Column): Column =
+    GraftFunctions.int8Quantize(s, emb)
 }
 
 /** Packs integral int8 codes (the `q` array of [[Int8Quantize]],
@@ -472,10 +463,8 @@ object Int8Pack {
     out
   }
 
-  def int8Pack(s: SparkSession, codes: Column): Column = {
-    VectorExprs.register(s)
-    call_function("graft_int8_pack", codes)
-  }
+  def int8Pack(s: SparkSession, codes: Column): Column =
+    GraftFunctions.int8Pack(s, codes)
 }
 
 /** Integer dot product straight over two packed int8 code vectors
@@ -528,15 +517,10 @@ object Int8DotBytes {
     acc.toDouble
   }
 
-  def int8Dot(s: SparkSession, a: Column, b: Column): Column = {
-    VectorExprs.register(s)
-    call_function("graft_int8_dot", a, b)
-  }
+  def int8Dot(s: SparkSession, a: Column, b: Column): Column =
+    GraftFunctions.int8Dot(s, a, b)
 }
 
-/** Column-level entry points. Registered per session (idempotent) so
-  * the expressions ride the public `call_function` API.
-  */
 /** Broadcast-corpus cosine scan: one call per vector row computes its
   * cosine against EVERY vector of a corpus array (struct<vec_id,
   * embedding, norm>, built once by `collect_list` and broadcast) and
@@ -788,73 +772,40 @@ object CosineScanScored {
   }
 }
 
+/** Column-level entry points: each installs its function from
+  * [[GraftFunctions]] and calls it by name (`call_function`).
+  */
 object VectorExprs {
-  def register(s: SparkSession): Unit = {
-    // per-name guards — see Registration.registerOnce
-    Registration.registerOnce(s, "graft_dot",
-      exprs => DotProduct(exprs(0), exprs(1)))
-    Registration.registerOnce(s, "graft_cosine_scan",
-      exprs => CosineScan(exprs(0), exprs(1), exprs(2), exprs(3),
-        exprs(4), exprs(5)))
-    Registration.registerOnce(s, "graft_simhash64",
-      exprs => SimHash64(exprs.head))
-    Registration.registerOnce(s, "graft_simhash60_portable",
-      exprs => PortableSimHash60(exprs.head))
-    Registration.registerOnce(s, "graft_byte_stats",
-      exprs => ByteStats(exprs.head))
-    Registration.registerOnce(s, "graft_phash60",
-      exprs => Phash60(exprs.head))
-    Registration.registerOnce(s, "graft_int8_quantize",
-      exprs => Int8Quantize(exprs.head))
-    Registration.registerOnce(s, "graft_int8_pack",
-      exprs => Int8Pack(exprs.head))
-    Registration.registerOnce(s, "graft_int8_dot",
-      exprs => Int8DotBytes(exprs(0), exprs(1)))
-    Registration.registerOnce(s, "graft_cosine_scan_scored",
-      exprs => CosineScanScored(exprs(0), exprs(1), exprs(2), exprs(3),
-        exprs(4)))
-  }
-
-  def dot(s: SparkSession, a: Column, b: Column): Column = {
-    register(s)
-    call_function("graft_dot", a, b)
-  }
+  def dot(s: SparkSession, a: Column, b: Column): Column =
+    GraftFunctions.dot(s, a, b)
 
   /** Top-k neighbor ids of `emb` against the broadcast `corpus`
     * array (see [[CosineScan]]); (score desc, id asc) rank order.
     */
   def cosineKnn(s: SparkSession, emb: Column, norm: Column,
-      selfId: Column, corpus: Column, k: Int): Column = {
-    register(s)
-    call_function("graft_cosine_scan", emb, norm, selfId, corpus,
+      selfId: Column, corpus: Column, k: Int): Column =
+    GraftFunctions.cosineScan(s, emb, norm, selfId, corpus,
       org.apache.spark.sql.functions.lit(k),
       org.apache.spark.sql.functions.lit(0.0))
-  }
 
   /** Top-k (id, score) neighbor structs of `emb` against the
     * broadcast `corpus` array (see [[CosineScanScored]]); (score
     * desc, id asc) rank order, self excluded.
     */
   def cosineKnnScored(s: SparkSession, emb: Column, norm: Column,
-      selfId: Column, corpus: Column, k: Int): Column = {
-    register(s)
-    call_function("graft_cosine_scan_scored", emb, norm, selfId, corpus,
+      selfId: Column, corpus: Column, k: Int): Column =
+    GraftFunctions.cosineScanScored(s, emb, norm, selfId, corpus,
       org.apache.spark.sql.functions.lit(k))
-  }
 
   /** Ids j > selfId whose r6 cosine against `emb` clears `cut` (the
     * i<j pair form of [[CosineScan]]).
     */
   def cosineCut(s: SparkSession, emb: Column, norm: Column,
-      selfId: Column, corpus: Column, cut: Double): Column = {
-    register(s)
-    call_function("graft_cosine_scan", emb, norm, selfId, corpus,
+      selfId: Column, corpus: Column, cut: Double): Column =
+    GraftFunctions.cosineScan(s, emb, norm, selfId, corpus,
       org.apache.spark.sql.functions.lit(0),
       org.apache.spark.sql.functions.lit(cut))
-  }
 
-  def simhash64(s: SparkSession, tokenHashes: Column): Column = {
-    register(s)
-    call_function("graft_simhash64", tokenHashes)
-  }
+  def simhash64(s: SparkSession, tokenHashes: Column): Column =
+    GraftFunctions.simhash64(s, tokenHashes)
 }

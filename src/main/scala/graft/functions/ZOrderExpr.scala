@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Morton / Z-order key: bit-interleave of two 21-bit dimensions into
@@ -65,15 +64,9 @@ object ZOrderExpr {
     z
   }
 
-  def register(s: SparkSession): Unit =
-    Registration.registerOnce(s, "graft_zorder",
-      exprs => ZOrderExpr(exprs(0), exprs(1)))
-
   /** Column form: z-order key of two long dimensions (each masked to
     * 21 bits).
     */
-  def zorder(s: SparkSession, x: Column, y: Column): Column = {
-    register(s)
-    call_function("graft_zorder", x, y)
-  }
+  def zorder(s: SparkSession, x: Column, y: Column): Column =
+    GraftFunctions.zorder(s, x, y)
 }

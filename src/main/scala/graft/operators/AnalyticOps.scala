@@ -13,13 +13,6 @@ import graft.engine.Tables
   */
 object AnalyticOps {
 
-  /** Conf gating the shared sorted-ticks silver (`spark.graft.ticks.
-    * materialize`, default true): OFF returns the bare projection and
-    * every sequence operator pays its own per-symbol shuffle+sort —
-    * the before/after lever TickSilverSpec pins equal.
-    */
-  val TicksMaterializeConf = "spark.graft.ticks.materialize"
-
   /** The per-symbol SORTED tick frame (event_id, us, symbol, value)
     * — the shared silver of the indicator/sequence family
     * (`lag_features`, `ewma_smooth`, `autocorrelation`, `ljung_box`,
@@ -45,14 +38,13 @@ object AnalyticOps {
   private[graft] def sortedTicks(s: SparkSession, d: String): DataFrame = {
     // props rides along for obv_indicator's volume field; the cached
     // scan prunes it for the seven consumers that don't read it
-    def base = Tables.events(s, d)
-      .select(col("event_id"), unix_micros(col("ts")).as("us"),
-        col("event_type").as("symbol"), col("value"), col("props"))
-    if (!s.conf.get(TicksMaterializeConf, "true").toBoolean) return base
     graft.engine.SessionMemo.getOrBuild(s,
       "sorted_ticks|" +
         graft.engine.SessionMemo.tableFingerprint(s, d, "events"))(
-      base.repartition(col("symbol"))
+      Tables.events(s, d)
+        .select(col("event_id"), unix_micros(col("ts")).as("us"),
+          col("event_type").as("symbol"), col("value"), col("props"))
+        .repartition(col("symbol"))
         .sortWithinPartitions(col("symbol"), col("us"), col("event_id")))
   }
 
@@ -3902,8 +3894,7 @@ object AnalyticOps {
     * one events scan per (session, corpus) total, the cached
     * materialization served three times — instead of scanning the
     * parquet three times (the pre-silver shape, real money at
-    * 100 TB; `spark.graft.ticks.materialize=false` restores the bare
-    * three-scan plan, TickSilverSpec pins both).
+    * 100 TB; TickSilverSpec pins the one-scan plan).
     */
   def spearmanCorr(s: SparkSession, d: String): DataFrame = {
     val rows = sortedTicks(s, d)

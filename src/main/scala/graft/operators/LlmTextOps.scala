@@ -259,20 +259,17 @@ object LlmTextOps {
 
   /** The near-dup pair set WITHOUT the final presentation sort. */
   /** The verified ≥ 0.8 near-dup pair stream: a Jaccard filter over
-    * the [[cooccurPairs]] co-occurrence silver (or its uncached twin
-    * when `spark.graft.neardup.materialize` is false). Seven
-    * downstream operators consume this exact pair set (pairs,
+    * the [[cooccurPairs]] co-occurrence silver. Seven downstream
+    * operators consume this exact pair set (pairs,
     * survivors, components, the capstone filter, the size/degree
     * histograms, the auto route), so the POST-threshold result keeps
     * its own memo layer — hundreds of 24-byte rows vs the raw
     * silver's ~1.1M, so consumers skip even the filter scan. The
     * upstream silver is resolved BEFORE entering this memo (the
-    * SessionMemo nesting hazard). FeatureOpsSpec pins conf
-    * ON == OFF.
+    * SessionMemo nesting hazard). FeatureOpsSpec pins the memoized
+    * pairs to a filter over [[cooccurPairsUncached]].
     */
   private[graft] def dedupNearPairs(s: SparkSession, d: String): DataFrame = {
-    if (!s.conf.get("spark.graft.neardup.materialize", "true").toBoolean)
-      return jaccardFilter(cooccurPairsUncached(s, d))
     val co = cooccurPairs(s, d)
     graft.engine.SessionMemo.getOrBuild(s,
       "neardup_pairs|" +
@@ -281,19 +278,13 @@ object LlmTextOps {
   }
 
   /** The single definition of the ≥ 0.8 Jaccard cut over a
-    * co-occurrence frame `(i, j, inter, sz_i, sz_j)` — shared by the
-    * memoized and uncached pair paths so the threshold and the r6
-    * fence can never drift between them.
+    * co-occurrence frame `(i, j, inter, sz_i, sz_j)`.
     */
-  private def jaccardFilter(co: DataFrame): DataFrame = co
+  private[graft] def jaccardFilter(co: DataFrame): DataFrame = co
     .withColumn("jaccard",
       r6(col("inter") / (col("sz_i") + col("sz_j") - col("inter"))))
     .where(col("jaccard") >= 0.8)
     .select("i", "j", "jaccard")
-
-  private[graft] def dedupNearPairsUncached(s: SparkSession,
-      d: String): DataFrame =
-    jaccardFilter(cooccurPairsUncached(s, d))
 
   /** The PRE-threshold co-occurrence pair stream — every doc pair
     * sharing at least one 3-shingle hash, with the intersection count
@@ -306,8 +297,7 @@ object LlmTextOps {
     * per (session, corpus) and every formulation filters the memoized
     * result (the `CorpusSilver` posture; the ANN index conf is the
     * same dial on the vector side). Memoized PERSISTED per (session,
-    * corpus fingerprint) when `spark.graft.neardup.materialize` is
-    * true (default); lifecycle and rewrite-invalidation ride
+    * corpus fingerprint); lifecycle and rewrite-invalidation ride
     * [[graft.engine.SessionMemo]].
     *
     * Cache mass: the raw co-occurrence set is bounded by
@@ -315,13 +305,10 @@ object LlmTextOps {
     * 1.13M rows (~45 MB persisted) at sf0.1, cheap on any executor.
     * At 100 TB this pre-threshold stream is exactly the quadratic
     * object the prefix/LSH routes exist to avoid materializing —
-    * there the conf goes OFF (or the [[dedupNearPrefix]] /
-    * banded-MinHash paths take over) and each consumer streams its
-    * own filtered pass.
+    * there the auto pair/substring routes switch to the
+    * banded-MinHash sources, which never read this silver.
     */
   private[graft] def cooccurPairs(s: SparkSession, d: String): DataFrame = {
-    if (!s.conf.get("spark.graft.neardup.materialize", "true").toBoolean)
-      return cooccurPairsUncached(s, d)
     graft.engine.SessionMemo.getOrBuild(s,
       "cooccur_pairs|" +
         graft.engine.SessionMemo.tableFingerprint(s, d, "documents"))(
@@ -663,8 +650,6 @@ object LlmTextOps {
     * is resolved BEFORE entering the memo (the SessionMemo nesting
     * hazard), and the resolved route is part of the key so a
     * conf-forced source can never serve another route's labels.
-    * `spark.graft.neardup.materialize` = false bypasses, as with
-    * every dedup silver.
     */
   private[graft] def componentsRouted(s: SparkSession, d: String): DataFrame = {
     // dedupNear emits each (i, j) exactly once (pairs are the keys of
@@ -672,8 +657,6 @@ object LlmTextOps {
     // initial distinct — one fewer shuffle over the widest data
     val pairs = dedupPairsRouted(s, d).select(col("i"), col("j"))
     def build = componentsFromPairs(s, pairs, pairsDistinct = true)
-    if (!s.conf.get("spark.graft.neardup.materialize", "true").toBoolean)
-      return build
     val src = s.conf.get(PairSourceConf, "auto") match {
       case "auto" => pairSourceRoute(s, d)
       case other  => other
@@ -1156,8 +1139,6 @@ object LlmTextOps {
         .where(col("jaccard") >= 0.8)
         .select("i", "j", "jaccard")
     }
-    if (!s.conf.get("spark.graft.neardup.materialize", "true").toBoolean)
-      return build
     graft.engine.SessionMemo.getOrBuild(s,
       "minhash_verified_pairs|" +
         graft.engine.SessionMemo.tableFingerprint(s, d, "documents"))(build)
@@ -2673,8 +2654,7 @@ object LlmTextOps {
     * registered consumers (`shared_substrings`,
     * `dedup_substring_removal`) read the identical runs, and the runs
     * table is maximal-chain rows (hundreds), far smaller than the
-    * window pass that builds it. `spark.graft.neardup.materialize` =
-    * false bypasses, as with every dedup silver.
+    * window pass that builds it.
     */
   private[graft] def substringRuns(s: SparkSession, d: String): DataFrame = {
     val src = s.conf.get(SubstrSourceConf, "auto") match {
@@ -2686,8 +2666,6 @@ object LlmTextOps {
     def build =
       if (src == "minhash") substringRunsBanded(s, d)
       else substringRunsUncached(s, d)
-    if (!s.conf.get("spark.graft.neardup.materialize", "true").toBoolean)
-      return build
     graft.engine.SessionMemo.getOrBuild(s,
       "substring_runs|" + src + "|" +
         graft.engine.SessionMemo.tableFingerprint(s, d, "documents"))(build)
@@ -2747,7 +2725,8 @@ object LlmTextOps {
       .select("i", "j", "diag", "len_wins", "pi_start")
   }
 
-  private def substringRunsUncached(s: SparkSession, d: String): DataFrame = {
+  private[graft] def substringRunsUncached(s: SparkSession,
+      d: String): DataFrame = {
     val wins = docWindows(s, d)
     val lists = wins.groupBy(col("wh"))
       .agg(collect_list(struct(col("doc_id"), col("pos"))).as("ms"))
@@ -2787,7 +2766,8 @@ object LlmTextOps {
     * mass is the published MinHash-recall tradeoff, bought to keep
     * the aligner's input linear.
     */
-  private def substringRunsBanded(s: SparkSession, d: String): DataFrame = {
+  private[graft] def substringRunsBanded(s: SparkSession,
+      d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val wide = graft.engine.Pairs.needsWideForm(docs, "doc_id")
     val sigs = minhashSignatures(s, d)

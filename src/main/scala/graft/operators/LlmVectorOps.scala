@@ -1427,17 +1427,13 @@ object LlmVectorOps {
     * registered consumers (`similarity_ivf_trained`, `semdedup`) each
     * re-trained the identical codebook — the two broadcast assignment
     * passes are the expensive part, and the codebook is k ≈ n/100
-    * tiny rows. Memoized per (session, embeddings fingerprint);
-    * `spark.graft.lloyd.materialize` = false bypasses (the
-    * baskets/neardup silver dial, vector-side).
+    * tiny rows. Memoized per (session, embeddings fingerprint).
     */
   private[graft] def trainedCentroids(s: SparkSession, d: String): DataFrame = {
     val e = withNorm(s, Tables.embeddings(s, d), "embedding", "norm")
     def build = (1 to 2).foldLeft(seedCentroids(e)) {
       (cents, _) => lloydStep(s, e, cents)
     }
-    if (!s.conf.get("spark.graft.lloyd.materialize", "true").toBoolean)
-      return build
     graft.engine.SessionMemo.getOrBuild(s,
       "lloyd_codebook|" +
         graft.engine.SessionMemo.tableFingerprint(s, d, "embeddings"))(build)
@@ -1532,7 +1528,7 @@ object LlmVectorOps {
     * between runs). The grid rounds unit-vector coordinates at ~1e-6
     * — noise-level next to the k-means objective itself.
     */
-  private def lloydStep(s: SparkSession, e: DataFrame,
+  private[graft] def lloydStep(s: SparkSession, e: DataFrame,
       cents: DataFrame): DataFrame = {
     val grid = (1L << 20).toDouble
     val means = assignToCentroids(s, e, cents, keep = 1)
@@ -1607,24 +1603,21 @@ object LlmVectorOps {
     // AND dedup_cascade's 5_semantic gate, and the Σ C(cell, 2) pair
     // scan above it re-ran per call (0.55 s/call at sf0.1 — the
     // whole cascade's dominant term). Memoize it like the assignment
-    // it reads (same `spark.graft.lloyd.materialize` dial, same
-    // fingerprint lifecycle); the hot-cell cap joins the key so a
-    // conf-forced cap never serves another cap's entry (outputs are
-    // pinned equal, but the key keeps the contract structural).
+    // it reads (same fingerprint lifecycle); the hot-cell cap joins
+    // the key so a conf-forced cap never serves another cap's entry
+    // (outputs are pinned equal, but the key keeps the contract
+    // structural).
     // `assigned` is resolved ABOVE the memo (SessionMemo nesting
     // convention). Ordering is applied on read — the memoized frame
     // is the unordered removed set.
-    if (s.conf.get("spark.graft.lloyd.materialize", "true").toBoolean)
-      return graft.engine.SessionMemo.getOrBuild(s,
-        "semdedup_removed|" + cap + "|" +
-          graft.engine.SessionMemo.tableFingerprint(s, d, "embeddings"))(
-        semdedupRemoved(s, assigned, cap)).orderBy("vec_id")
-    semdedupRemoved(s, assigned, cap).orderBy("vec_id")
+    graft.engine.SessionMemo.getOrBuild(s,
+      "semdedup_removed|" + cap + "|" +
+        graft.engine.SessionMemo.tableFingerprint(s, d, "embeddings"))(
+      semdedupRemoved(s, assigned, cap)).orderBy("vec_id")
   }
 
   /** [[semdedup]]'s removed-set lineage (unordered): the within-cell
-    * ε-pair scan + keep-the-outlier rule, factored so the memoized
-    * and bypass paths share one definition. */
+    * ε-pair scan + keep-the-outlier rule. */
   private def semdedupRemoved(s: SparkSession, assigned: DataFrame,
       cap: Int): DataFrame = {
     val decorated =
@@ -1696,8 +1689,7 @@ object LlmVectorOps {
     * the assignment TWICE (both sides); without the memo each side —
     * and each bench rep — re-ran the full pass (the 500k sweep's
     * shuffle-spill lesson). ~(embedding + 3 scalars) per vector, the
-    * signature-silver weight class. `spark.graft.lloyd.materialize`
-    * = false bypasses, same dial as the codebook.
+    * signature-silver weight class.
     */
   private[graft] def semdedupAssigned(s: SparkSession,
       d: String): DataFrame = {
@@ -1723,8 +1715,6 @@ object LlmVectorOps {
         .select(col("vec_id"), col("embedding"), col("norm"),
           col("cent_id"), r6(col("raw_sim")).as("cent_sim"))
     }
-    if (!s.conf.get("spark.graft.lloyd.materialize", "true").toBoolean)
-      return build
     graft.engine.SessionMemo.getOrBuild(s,
       "semdedup_assigned|" +
         graft.engine.SessionMemo.tableFingerprint(s, d, "embeddings"))(build)

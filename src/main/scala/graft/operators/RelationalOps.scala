@@ -513,23 +513,19 @@ object RelationalOps {
     * orders rows.
     */
   /** Per-order part baskets, memoized per (session, lineitem
-    * fingerprint) when `spark.graft.baskets.materialize` is true
-    * (default) — the market-basket silver: [[basketPairs]] and
+    * fingerprint) — the market-basket silver: [[basketPairs]] and
     * [[itemNeighbors]] both start from this exact aggregate, and a
     * production pipeline writes it once (the pair-silver / ANN-index
     * posture). The persisted frame is one small array row per order.
     * Lifecycle and rewrite-invalidation ride
     * [[graft.engine.SessionMemo]] (unpersist on context stop or
     * explicit invalidate; a lineitem table rewritten in-session keys
-    * a fresh build instead of serving stale baskets). Conf OFF
-    * recomputes per call — RelationalClassicsSpec pins ON == OFF.
+    * a fresh build instead of serving stale baskets).
     */
   private[graft] def orderBaskets(s: SparkSession, d: String): DataFrame = {
     def build = Tables.lineitem(s, d)
       .groupBy(col("l_orderkey"))
       .agg(collect_set(col("l_partkey")).as("ds"))
-    if (!s.conf.get("spark.graft.baskets.materialize", "true").toBoolean)
-      return build
     graft.engine.SessionMemo.getOrBuild(s,
       "baskets|" + graft.engine.SessionMemo.tableFingerprint(s, d, "lineitem"))(
       build)
@@ -606,7 +602,7 @@ object RelationalOps {
     * degree fold, the wedge probe, the final anti-join) and again by
     * [[clusteringCoeff]] — without a silver each reference replays
     * the full 8×|lineitem| pair explode; memoized it is one tiny
-    * (≤ |edges|) persisted frame (3.6k rows at sf0.1). Same conf +
+    * (≤ |edges|) persisted frame (3.6k rows at sf0.1). Same
     * fingerprint lifecycle as the basket silver it derives from.
     */
   private[graft] def coPurchaseEdges(s: SparkSession, d: String)
@@ -619,9 +615,7 @@ object RelationalOps {
       baskets.where(size(col("ds")) > 1), "ds", "co",
       graft.engine.Pairs.needsWideForm(Tables.lineitem(s, d), "l_partkey"))
       .where(col("co") >= 2).select(col("i"), col("j"))
-    if (!s.conf.get("spark.graft.baskets.materialize", "true").toBoolean)
-      buildE
-    else graft.engine.SessionMemo.getOrBuild(s,
+    graft.engine.SessionMemo.getOrBuild(s,
       "copurchase_co2|" +
         graft.engine.SessionMemo.tableFingerprint(s, d, "lineitem"))(buildE)
   }
@@ -656,7 +650,7 @@ object RelationalOps {
     * family's dominant real work) evaluated once per consumer. The
     * aggregate is ≤ |co-neighbor pairs| rows (the pair-silver weight
     * class), memoized per (session, lineitem fingerprint) under the
-    * same conf/lifecycle as the edge silver it reads. The weight
+    * same lifecycle as the edge silver it reads. The weight
     * inner-join is a no-op row filter: a wedge center has two
     * distinct neighbors by construction, so deg ≥ 2 always holds and
     * jaccard's unweighted n_common is unchanged by riding this
@@ -689,9 +683,7 @@ object RelationalOps {
         .join(broadcast(deg.select(col("k").as("j"), col("dg").as("deg_j"))),
           Seq("j"))
     }
-    if (!s.conf.get("spark.graft.baskets.materialize", "true").toBoolean)
-      build
-    else graft.engine.SessionMemo.getOrBuild(s,
+    graft.engine.SessionMemo.getOrBuild(s,
       "copurchase_wedges|" +
         graft.engine.SessionMemo.tableFingerprint(s, d, "lineitem"))(build)
   }

@@ -179,7 +179,7 @@ object CorpusSilver {
     * keeps accepting the index for the grown corpus. Offline batch
     * API (parquet append — a replayed append duplicates rows); the
     * replay-idempotent epoch layout lives on the edge-silver side
-    * ([[appendKnnEdges]]).
+    * ([[graft.operators.KnnIncremental.append]]).
     */
   def appendAnnIndex(s: SparkSession, sfDir: String, dir: String,
       batch: DataFrame): Unit = {
@@ -219,38 +219,6 @@ object CorpusSilver {
         graft.operators.LlmVectorOps.KnnEdgesFile).toString)
     writeCorpusFingerprint(s, sfDir, dir)
   }
-
-  /** The INCREMENTAL kNN edge silver ([[graft.operators.KnnIncremental]])
-    * — the maintainable sibling of [[writeKnnEdges]]: where that one
-    * is write-once (every corpus append forces a full rebuild), this
-    * layout stores the frozen codebook + epoch-partitioned
-    * member/probe/edge tables so [[appendKnnEdges]] folds a batch of
-    * new vectors in at batch-proportional cost (assign against the
-    * STORED codebook — no re-train — then re-rank only the nodes
-    * whose probed lists received new members). `knn_edges_incremental`
-    * gates append-then-serve against the same exact-edge oracle as
-    * `knn_edges`; KnnRoutingSpec pins append == rebuild at partial
-    * probe and the codebook bit-stable across appends.
-    */
-  def writeKnnEdgesIncremental(s: SparkSession, sfDir: String, dir: String,
-      nprobe: Int): Unit =
-    graft.operators.KnnIncremental.build(s,
-      Tables.embeddings(s, sfDir)
-        .select(org.apache.spark.sql.functions.col("vec_id"),
-          org.apache.spark.sql.functions.col("embedding")),
-      dir, nprobe)
-
-  /** Fold one batch of (vec_id, embedding) rows into the incremental
-    * edge silver as `epoch` (epochs are the idempotence unit — a
-    * replayed append overwrites its own epoch dirs, nothing else). */
-  def appendKnnEdges(s: SparkSession, dir: String, batch: DataFrame,
-      epoch: Long): Unit =
-    graft.operators.KnnIncremental.append(s, dir, batch, epoch)
-
-  /** Serve the maintained (src, dst) edge set from the incremental
-    * silver — latest epoch per src. */
-  def knnEdgesFromIncremental(s: SparkSession, dir: String): DataFrame =
-    graft.operators.KnnIncremental.servedEdges(s, dir)
 
   /** Bucketed silver layout: pay the shuffle ONCE at write time.
     * Pairs bucket on the removal key `j`, documents on `doc_id`, same

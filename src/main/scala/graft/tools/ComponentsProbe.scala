@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe (not part of the driver contract): time the pieces of
   * `item_components` — edge silver build vs the large∘small fixpoint
   * — and report the round count at a given SF.
@@ -9,14 +7,8 @@ import org.apache.spark.sql.SparkSession
 object ComponentsProbe {
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession.local(cpus)
     def time[T](tag: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
       println(f"[probe] $tag%-28s ${(System.nanoTime() - t0) / 1e9}%8.3f s")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.KnnIncremental
@@ -36,15 +35,8 @@ object KnnIncrementalSweep {
       .split(",").map(_.trim.toLong).toSeq
     val batchN = args.lift(2).map(_.toLong).getOrElse(2048L)
     val reps = args.lift(3).map(_.toInt).getOrElse(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession.local(cpus)
 
     def timed[T](body: => T): Double = {
       System.gc()

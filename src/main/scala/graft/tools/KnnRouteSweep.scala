@@ -78,15 +78,8 @@ object KnnRouteSweep {
     val sizes = args.lift(1).getOrElse("32768,131072")
       .split(",").map(_.trim.toLong).toSeq
     val reps = args.lift(2).map(_.toInt).getOrElse(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession.local(cpus)
 
     val results = sizes.map { n =>
       val dir = s"$outBase/v$n"

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.engine.Tables
 import graft.pipeline.CryptoIngest
 
@@ -14,13 +12,7 @@ object PipelineDemo {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_pipeline"
     val keepDays = if (args.length > 2) args(2).toInt else 1
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(4)
     val ticks = Tables.ticks(spark, sfDir)
     val dropped = CryptoIngest.runBatch(ticks, s"$outDir/raw",
       s"$outDir/hourly", keepDays)

@@ -18,12 +18,7 @@ import graft.operators.LlmVectorOps
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(8)
     def topkSet(df: DataFrame): Set[(Long, Long)] =
       df.select("probe_id", "vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -160,15 +160,8 @@ object ScaleSweep {
     val nDocs = args.lift(1).map(_.toLong).getOrElse(50000L)
     val nVecs = args.lift(2).map(_.toLong).getOrElse(8000L)
     val reps = args.lift(3).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession.local(cpus)
 
     // idempotence guard covers BOTH tables plus a generator-version
     // marker: a run killed between the two writes must not leave a

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Drive the SQL-facing surface: session built with
   * `spark.sql.extensions=graft.GraftExtensions` (the config-string
   * path a cluster would use), native functions called from pure SQL
@@ -10,12 +8,9 @@ import org.apache.spark.sql.SparkSession
 object SqlDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
+    val spark = graft.GraftSession.builder(4)
       .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     println("[sql] graft_dot: " + spark.sql(

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.LlmVectorOps
 
 /** Ad-hoc timing probe for the trained-codebook kNN route: breaks the
@@ -13,15 +11,8 @@ import graft.operators.LlmVectorOps
 object TrainProbe {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/tmp/graft_scale/knn/v131072")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession.local(cpus)
     def t(label: String)(body: => Any): Unit = {
       val t0 = System.nanoTime()
       val r = body

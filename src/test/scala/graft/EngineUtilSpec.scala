@@ -299,22 +299,20 @@ class EngineUtilSpec extends AnyFunSuite {
 
   test("orderBaskets memo survives repeat calls and yields identical baskets") {
     // the basket silver must serve the same persisted frame across
-    // consumers (basket_pairs + item_neighbors) and equal the
-    // conf-OFF rebuild
+    // consumers (basket_pairs + item_neighbors) and equal a fresh
+    // per-order aggregate of lineitem
     val s = spark
     val d = TestSpark.sf0001
     val m1 = graft.operators.RelationalOps.orderBaskets(s, d)
     val m2 = graft.operators.RelationalOps.orderBaskets(s, d)
     assert(m1 eq m2, "basket silver must memoize per (session, table)")
-    s.conf.set("spark.graft.baskets.materialize", "false")
-    try {
-      val off = graft.operators.RelationalOps.orderBaskets(s, d)
-      assert(!(off eq m1))
-      val a = m1.select(col("l_orderkey"), array_sort(col("ds")).as("ds"))
+    val fresh = graft.engine.Tables.lineitem(s, d)
+      .groupBy(col("l_orderkey"))
+      .agg(collect_set(col("l_partkey")).as("ds"))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(col("l_orderkey"), array_sort(col("ds")).as("ds"))
         .collect().map(_.toString).sorted.toSeq
-      val b = off.select(col("l_orderkey"), array_sort(col("ds")).as("ds"))
-        .collect().map(_.toString).sorted.toSeq
-      assert(a == b && a.nonEmpty)
-    } finally s.conf.set("spark.graft.baskets.materialize", "true")
+    val a = rows(m1)
+    assert(a == rows(fresh) && a.nonEmpty)
   }
 }

@@ -386,35 +386,21 @@ class FeatureOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("near-dup pair memoization: conf ON == OFF for pairs and components") {
+  test("near-dup pair memoization: memoized pairs and components == uncached builds") {
     val s = spark
-    val conf = "spark.graft.neardup.materialize"
-    val prev = s.conf.getOption(conf)
-    try {
-      s.conf.set(conf, "false")
-      val pairsOff = LlmTextOps.dedupNear(s, TestSpark.sf001).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      val compOff = LlmTextOps.dedupComponents(s, TestSpark.sf001).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq
-      val contOff = LlmTextOps.dedupContainment(s, TestSpark.sf001).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      s.conf.set(conf, "true")
-      val pairsOn = LlmTextOps.dedupNear(s, TestSpark.sf001).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      val compOn = LlmTextOps.dedupComponents(s, TestSpark.sf001).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq
-      val contOn = LlmTextOps.dedupContainment(s, TestSpark.sf001).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      assert(pairsOn == pairsOff)
-      assert(compOn == compOff)
-      assert(contOn == contOff,
-        "containment rides the shared co-occurrence silver: ON == OFF")
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set(conf, v)
-        case None => s.conf.unset(conf)
-      }
-    }
+    val d = TestSpark.sf001
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    val uncachedPairs =
+      LlmTextOps.jaccardFilter(LlmTextOps.cooccurPairsUncached(s, d))
+    assert(rows(LlmTextOps.dedupNearPairs(s, d)) == rows(uncachedPairs))
+    assert(rows(LlmTextOps.dedupComponents(s, d)) ==
+      rows(LlmTextOps.componentsFromPairs(s,
+        uncachedPairs.select("i", "j"), pairsDistinct = true)))
+    // containment rides the same co-occurrence silver
+    assert(rows(LlmTextOps.cooccurPairs(s, d)) ==
+      rows(LlmTextOps.cooccurPairsUncached(s, d)))
+    assert(LlmTextOps.dedupNearPairs(s, d) eq LlmTextOps.dedupNearPairs(s, d))
   }
 
   test("dsir_sample accepts exactly the cross-multiplied predicate over the weights") {

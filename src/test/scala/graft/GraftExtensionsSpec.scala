@@ -137,6 +137,49 @@ class GraftExtensionsSpec extends AnyFunSuite {
     }
   }
 
+  test("every table entry resolves and rejects a wrong arity with its usage, on both install paths") {
+    // one function table feeds both paths, so each entry must behave
+    // the same whichever path installed it: resolvable by name, and a
+    // bad call fails with the usage text instead of an index error
+    def check(path: String, s: SparkSession): Unit = {
+      for (f <- graft.functions.GraftFunctions.all) {
+        assert(s.catalog.functionExists(f.name), s"$path: ${f.name} unresolved")
+        val tooMany = Seq.fill(f.arity + 1)("NULL")
+          .mkString(s"SELECT ${f.name}(", ", ", ")")
+        val e = intercept[Exception](s.sql(tooMany).collect())
+        assert(e.getMessage.contains(f.usage),
+          s"$path: $tooMany failed without the usage text: ${e.getMessage}")
+      }
+      // plan-time integer arguments must be constants
+      for ((q, usage) <- Seq(
+          "SELECT graft_mg(id, id) FROM range(3)" -> "graft_mg(key, capacity)",
+          "SELECT graft_topk(CAST(id AS DOUBLE), id, id) FROM range(3)" ->
+            "graft_topk(score, id, k)")) {
+        val e = intercept[Exception](s.sql(q).collect())
+        assert(e.getMessage.contains(usage),
+          s"$path: $q failed without the usage text: ${e.getMessage}")
+      }
+    }
+    withExtensionsSession(check("extensions", _))
+    val base = TestSpark.spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val fresh = SparkSession.builder()
+      .master("local[2]").appName("graft-regall-arity-spec")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    try {
+      assert(!fresh.catalog.functionExists("graft_dot"),
+        "a plain session must start without graft functions")
+      GraftSession.registerAll(fresh)
+      check("registerAll", fresh)
+    } finally {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      SparkSession.setDefaultSession(base)
+      SparkSession.setActiveSession(base)
+    }
+  }
+
   test("previously-broken operators run end-to-end on the extensions session") {
     withExtensionsSession { s =>
       // each of these resolved to an undefined function under the

@@ -74,25 +74,22 @@ class PairRoutingSpec extends AnyFunSuite {
     } finally spark.conf.unset(LlmTextOps.PairSourceConf)
   }
 
-  test("memoized silvers (components, substring runs, Lloyd codebook) == conf-OFF rebuilds") {
+  test("memoized silvers (components, substring runs, Lloyd codebook) == their uncached builds") {
     val d = TestSpark.sf0001
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
-    val compsOn = rows(LlmTextOps.componentsRouted(spark, d))
-    val runsOn = rows(LlmTextOps.substringRuns(spark, d))
-    val ivfOn = rows(graft.operators.LlmVectorOps
-      .similarityIvfTrained(spark, d))
-    spark.conf.set("spark.graft.neardup.materialize", "false")
-    spark.conf.set("spark.graft.lloyd.materialize", "false")
-    try {
-      assert(rows(LlmTextOps.componentsRouted(spark, d)) == compsOn)
-      assert(rows(LlmTextOps.substringRuns(spark, d)) == runsOn)
-      assert(rows(graft.operators.LlmVectorOps
-        .similarityIvfTrained(spark, d)) == ivfOn)
-    } finally {
-      spark.conf.unset("spark.graft.neardup.materialize")
-      spark.conf.unset("spark.graft.lloyd.materialize")
-    }
+    assert(rows(LlmTextOps.componentsRouted(spark, d)) ==
+      rows(LlmTextOps.componentsFromPairs(spark,
+        LlmTextOps.dedupPairsRouted(spark, d).select("i", "j"),
+        pairsDistinct = true)))
+    // sf0.001 sits far below the substring crossover: auto == exact
+    assert(rows(LlmTextOps.substringRuns(spark, d)) ==
+      rows(LlmTextOps.substringRunsUncached(spark, d)))
+    val v = graft.operators.LlmVectorOps
+    val e = v.withNorm(spark, graft.engine.Tables.embeddings(spark, d),
+      "embedding", "norm")
+    assert(rows(v.trainedCentroids(spark, d)) == rows((1 to 2)
+      .foldLeft(v.seedCentroids(e))((c, _) => v.lloydStep(spark, e, c))))
     // second memoized call serves the SAME frame (no rebuild)
     assert(LlmTextOps.componentsRouted(spark, d)
       eq LlmTextOps.componentsRouted(spark, d))

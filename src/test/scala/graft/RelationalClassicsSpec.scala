@@ -299,20 +299,6 @@ class RelationalClassicsSpec extends AnyFunSuite {
     assert(got.values.sum == allCust.size.toLong)
   }
 
-  test("basket silver: materialize ON == OFF for both consumers") {
-    val conf = "spark.graft.baskets.materialize"
-    def collectBoth() = (
-      RelationalOps.basketPairs(spark, sf).collect().toSeq,
-      RelationalOps.itemNeighbors(spark, sf).collect().toSeq)
-    spark.conf.set(conf, "true")
-    val on = collectBoth()
-    try {
-      spark.conf.set(conf, "false")
-      val off = collectBoth()
-      assert(on == off)
-    } finally spark.conf.set(conf, "true")
-  }
-
   test("top_supplier == the exact-decimal max; all ties returned") {
     val got = RelationalOps.topSupplier(spark, sf).collect()
     val perSupp = lineitem
@@ -366,14 +352,6 @@ class RelationalClassicsSpec extends AnyFunSuite {
       s"got ${got.take(3)}... want ${want.take(3)}...")
     // every returned pair must NOT be an edge (it is a prediction)
     got.foreach { case (i, j, _, _) => assert(!edges((i, j))) }
-    // the memoized co>=2 edge silver changes nothing but the plan
-    spark.conf.set("spark.graft.baskets.materialize", "false")
-    try {
-      val off = RelationalOps.adamicAdar(spark, sf).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getDouble(3))).toSeq
-      assert(off == got)
-    } finally spark.conf.set("spark.graft.baskets.materialize", "true")
   }
 
   test("item_components == driver union-find over the co-purchase edges") {

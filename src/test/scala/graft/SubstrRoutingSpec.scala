@@ -118,14 +118,11 @@ class SubstrRoutingSpec extends AnyFunSuite {
     } finally spark.conf.unset(LlmTextOps.SubstrSourceConf)
   }
 
-  test("banded memoized runs == conf-OFF rebuild, and routes memoize under distinct keys") {
+  test("banded memoized runs == uncached banded build, and routes memoize under distinct keys") {
     val d = TestSpark.sf0001
     val memo = forced("minhash")(rows(LlmTextOps.substringRuns(spark, d)))
-    spark.conf.set("spark.graft.neardup.materialize", "false")
-    try {
-      val fresh = forced("minhash")(rows(LlmTextOps.substringRuns(spark, d)))
-      assert(fresh == memo, "banded memo must equal its conf-OFF rebuild")
-    } finally spark.conf.unset("spark.graft.neardup.materialize")
+    assert(rows(LlmTextOps.substringRunsBanded(spark, d)) == memo,
+      "banded memo must equal its uncached build")
     // the two routes memoize under different keys: serving the banded
     // frame to an exact-route caller (or vice versa) would silently
     // swap semantics

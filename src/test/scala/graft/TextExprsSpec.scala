@@ -225,7 +225,7 @@ class TextExprsSpec extends AnyFunSuite {
     // the expressions read 8-byte array slots directly; an INT32 id
     // column (e.g. an externally written silver table) must fail
     // analysis loudly, not read misaligned data
-    graft.functions.TextExprs.register(spark)
+    GraftSession.registerAll(spark)
     for (sql <- Seq(
         "SELECT graft_packed_pairs(array(1, 2))",
         "SELECT graft_pairs(array(1, 2))",
