@@ -33,69 +33,40 @@ object Pairs {
     * keep construction lazy by passing `wide` to the generators
     * directly.
     *
-    * The probe can be skipped entirely (keeping DataFrame
-    * construction fully lazy — e.g. for plan-only inspection) via the
-    * session conf `spark.graft.pairs.wideForm`: `wide` forces the
-    * always-correct struct form, `packed` asserts the caller's ids
-    * fit 31 bits (misassertion degrades to PackedPairs' loud
-    * fail-fast, never wrong pairs), `auto` (default) probes.
-    *
-    * Memoized per (session, file roots + probed schema) — but ONLY
-    * when the plan between the probed column and its file leaves is
-    * row-preserving (projections/aliases): a verdict measured through
-    * a Filter/Limit/Join would describe a subset of the files, and a
+    * Memoized in [[SessionMemo]] per (session, file roots + probed
+    * schema + a fingerprint of each root) — but ONLY when the plan
+    * between the probed column and its file leaves is row-preserving
+    * (projections/aliases): a verdict measured through a
+    * Filter/Limit/Join would describe a subset of the files, and a
     * later full-table probe of the same root would wrongly reuse its
     * (possibly narrower) answer. Non-row-preserving plans are probed
-    * every call. A stale cached entry for the same files (rewritten
-    * in place with wider ids mid-session) can only under-report
-    * width, which degrades to PackedPairs' loud fail-fast — never to
-    * silently wrong pairs.
+    * every call. The root fingerprints make a table rewritten in place
+    * (say, with wider ids) re-probe exactly when its scans re-resolve.
     */
   def needsWideForm(ids: DataFrame, idCol: String): Boolean = {
-    ids.sparkSession.conf.get(WideFormConf, "auto") match {
-      case "wide"   => return true
-      case "packed" => return false
-      case "auto"   => ()
-      case other    => throw new IllegalArgumentException(
-        s"$WideFormConf must be auto|packed|wide, got '$other'")
-    }
     // cache key = the file roots of every leaf + the probed column's
-    // schema: session-free strings (a plan object would strongly
-    // reference the SparkSession through its file relations,
-    // defeating the weak keying below) with source identity spelled
-    // out — a plan's toString TRUNCATES the location, so two
-    // different parquet tables would otherwise collide on one key
-    // and reuse the wrong verdict. Plans with any non-file leaf
-    // (in-memory test frames, views over synthetic data) return None
-    // and are probed every call: that probe is cheap exactly when
-    // the data isn't a 100 TB file source. The probe job itself runs
-    // OUTSIDE the map's locks (computeIfAbsent would hold a bin lock
-    // for the job's whole duration — minutes at scale, stalling
-    // unrelated same-bin probes); the race cost is only an
-    // occasional duplicate probe of the same answer.
-    val projected = ids.select(col(idCol))
-    val key = cacheKey(projected.queryExecution.analyzed)
-    val perSession = probeCache.computeIfAbsent(ids.sparkSession,
-      _ => new java.util.concurrent.ConcurrentHashMap[String,
-        java.lang.Boolean]())
-    key.flatMap(k => Option(perSession.get(k))) match {
-      case Some(cached) => cached.booleanValue()
-      case None =>
-        val r = ids.agg(
-          min(col(idCol).cast("long")).as("lo"),
-          max(col(idCol).cast("long")).as("hi")).head()
-        val wide = !r.isNullAt(0) &&
-          (r.getLong(0) < 0L || r.getLong(1) > Int.MaxValue.toLong)
-        key.foreach(k =>
-          perSession.putIfAbsent(k, java.lang.Boolean.valueOf(wide)))
-        wide
+    // schema: session-free strings with source identity spelled out —
+    // a plan's toString TRUNCATES the location, so two different
+    // parquet tables would otherwise collide on one key and reuse the
+    // wrong verdict. Plans with any non-file leaf (in-memory test
+    // frames, views over synthetic data) return None and are probed
+    // every call: that probe is cheap exactly when the data isn't a
+    // 100 TB file source.
+    val s = ids.sparkSession
+    def probe: java.lang.Boolean = {
+      val r = ids.agg(
+        min(col(idCol).cast("long")).as("lo"),
+        max(col(idCol).cast("long")).as("hi")).head()
+      !r.isNullAt(0) &&
+        (r.getLong(0) < 0L || r.getLong(1) > Int.MaxValue.toLong)
+    }
+    cacheKey(s, ids.select(col(idCol)).queryExecution.analyzed) match {
+      case Some(k) => SessionMemo.getOrCompute(s, k)(probe).booleanValue()
+      case None => probe.booleanValue()
     }
   }
 
-  /** Public name of the probe-bypass conf (see [[needsWideForm]]). */
-  val WideFormConf = "spark.graft.pairs.wideForm"
-
-  private def cacheKey(
+  private def cacheKey(s: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : Option[String] = {
     import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
@@ -124,20 +95,20 @@ object Pairs {
       case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         lr.relation match {
           case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            Some(fs.location.rootPaths.mkString(";"))
+            Some(fs.location.rootPaths.map(_.toString))
           case _ => None
         }
       case _ => None
     }
+    // the schema goes first and the fingerprints last: sibling
+    // eviction cuts the key at its last '@', which then always falls
+    // inside the final root's fingerprint
     if (roots.nonEmpty && roots.forall(_.isDefined))
-      Some(roots.flatten.mkString("|") + "#" + plan.schema.catalogString)
+      Some("wide_form|" + plan.schema.catalogString + "#" + roots.flatten
+        .map(_.map(SessionMemo.pathFingerprint(s, _)).mkString(";"))
+        .mkString("|"))
     else None
   }
-
-  private val probeCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]]())
 
   /** Distinct (i, j) candidate id pairs (i < j) from posting lists —
     * `listCol` is an array<long> of the ids sharing one bucket.

@@ -2,31 +2,37 @@ package graft.engine
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session-scoped memoization for persisted silver DataFrames (the
-  * order-basket and verified-pair silvers). Replaces the per-site
-  * `WeakHashMap[SparkSession, Map[String, DataFrame]]` pattern, which
-  * could never evict: a persisted Dataset's `sparkSession` field
-  * strongly references the weak KEY, so the weak entry was
-  * unreclaimable by construction and persisted blocks pinned storage
-  * for the life of the JVM.
+/** The one home for session-scoped state: persisted silver
+  * DataFrames ([[getOrBuild]]) and every other per-session value —
+  * resolved table plans, corpus routing stats, resolved routes, trained
+  * merge lists, wide-form probe verdicts ([[getOrCompute]]). Replaces
+  * the per-site `WeakHashMap[SparkSession, Map[String, DataFrame]]`
+  * pattern, which could never evict: a persisted Dataset's
+  * `sparkSession` field strongly references the weak KEY, so the weak
+  * entry was unreclaimable by construction and persisted blocks pinned
+  * storage for the life of the JVM.
   *
   * Design:
   *   - sessions map to a synthetic id through a WeakHashMap whose
   *     values are plain Strings — that map holds no strong reference
   *     to the session, so ITS entries collect normally;
-  *   - the DataFrame store is keyed by the synthetic id, and an
+  *   - both stores are keyed by the synthetic id, and an
   *     application-end listener (registered once per session) evicts
-  *     and unpersists the session's memos, releasing the last strong
-  *     references so a stopped session can be collected in a JVM
-  *     that outlives it;
+  *     the session's entries and unpersists its frames, releasing the
+  *     last strong references so a stopped session can be collected in
+  *     a JVM that outlives it; [[invalidate]] drops the same set;
   *   - memo keys embed [[tableFingerprint]] of the backing table, so
-  *     a corpus rewritten in place mid-session builds fresh silver
-  *     instead of serving stale results — up to the fingerprint
-  *     cache's short TTL window (`graft.fingerprint.ttlMs`, default
-  *     5 s; 0 restores immediate detection).
+  *     a table rewritten in place mid-session builds fresh values
+  *     instead of serving stale results — from the first call after
+  *     the fingerprint cache's 5 s TTL, or at once after
+  *     [[invalidate]].
   *
   * Residual (documented): a session discarded WITHOUT stopping its
   * context keeps its memos until [[invalidate]] — Spark exposes no
@@ -34,7 +40,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * multi-session servers should call [[invalidate]] when retiring a
   * session.
   *
-  * Builders run OUTSIDE the map's locks (probe, build, putIfAbsent —
+  * Builders run OUTSIDE the maps' locks (probe, build, putIfAbsent —
   * see [[getOrBuild]]), so a builder may recursively resolve other
   * memos on the same session without deadlock or
   * IllegalStateException. Derived silvers still PREFER resolving
@@ -48,8 +54,20 @@ object SessionMemo {
     new java.util.WeakHashMap[SparkSession, String]())
   private val memos =
     new ConcurrentHashMap[String, ConcurrentHashMap[String, DataFrame]]()
-  private val plans =
-    new ConcurrentHashMap[String, ConcurrentHashMap[String, DataFrame]]()
+  private val values =
+    new ConcurrentHashMap[String, ConcurrentHashMap[String, AnyRef]]()
+
+  /** Run a best-effort step: a non-fatal failure is reported on stderr
+    * and `fallback` returned instead; fatal errors propagate. */
+  private def bestEffort[T](what: String, fallback: => T)(body: => T): T =
+    try body
+    catch { case NonFatal(e) =>
+      System.err.println(s"[graft] SessionMemo: $what failed: $e")
+      fallback
+    }
+
+  private def unpersistBestEffort(df: DataFrame): Unit =
+    bestEffort("unpersist", ())(df.unpersist(blocking = false))
 
   private def idOf(s: SparkSession): String = {
     var fresh = false
@@ -64,29 +82,32 @@ object SessionMemo {
     }
     if (fresh) {
       val sid = id
-      try s.sparkContext.addSparkListener(new SparkListener {
-        override def onApplicationEnd(
-            e: SparkListenerApplicationEnd): Unit = clearId(sid)
-      }) catch { case _: Throwable => () }
+      bestEffort("registering the application-end listener", ()) {
+        s.sparkContext.addSparkListener(new SparkListener {
+          override def onApplicationEnd(
+              e: SparkListenerApplicationEnd): Unit = clearId(sid)
+        })
+      }
     }
     id
   }
 
   private def clearId(id: String): Unit = {
     val m = memos.remove(id)
-    if (m != null) m.values.forEach { df =>
-      try df.unpersist(blocking = false) catch { case _: Throwable => () }
-    }
-    plans.remove(id)
+    if (m != null) m.values.forEach(df => unpersistBestEffort(df))
+    values.remove(id)
   }
 
-  /** Drop (and unpersist) everything memoized for this session. */
+  /** Drop everything memoized for this session — persisted frames
+    * (unpersisted), plans, stats, routes, merge lists and probe
+    * verdicts — and every cached fingerprint. */
   def invalidate(s: SparkSession): Unit = {
     clearId(idOf(s))
     expireFingerprints()
   }
 
-  /** Count of live memo entries for this session (test hook). */
+  /** Count of live persisted-frame memos for this session (test and
+    * benchmark hook; [[getOrCompute]] values are not counted). */
   private[graft] def size(s: SparkSession): Int = {
     val m = memos.get(idOf(s))
     if (m == null) 0 else m.size()
@@ -101,15 +122,8 @@ object SessionMemo {
     * results after a remote rewrite). One listing RPC batch per
     * memoized call — noise next to the scan the query itself plans.
     * A corpus rewritten in place changes the fingerprint, keying a
-    * fresh build.
-    *
-    * Listing-tax escape hatch: `-Dgraft.fingerprint.shallow=true`
-    * folds only the ROOT status (mtime/length, one stat call) — for
-    * deployments whose writers replace the whole table path
-    * atomically (Spark's `mode("overwrite")`, rename-commit jobs),
-    * where the root status already changes on every rewrite. The
-    * default stays the deep fold: it is the only mode that detects a
-    * single part-file rewritten in place under an untouched root.
+    * fresh build; the deep fold is the only form that detects a single
+    * part-file rewritten in place under an untouched root.
     */
   def tableFingerprint(sfDir: String, table: String): String = {
     // thread-local fallback resolution, kept for call sites that have
@@ -119,7 +133,7 @@ object SessionMemo {
     // can resolve a differently-configured FileSystem than the one
     // that built the memo (missing credentials → throw or a
     // fingerprint inconsistent with the session's)
-    fingerprintWith(sfDir, table,
+    fingerprintWith(tablePath(sfDir, table),
       SparkSession.getActiveSession
         .map(_.sessionState.newHadoopConf())
         .getOrElse(new org.apache.hadoop.conf.Configuration()))
@@ -133,70 +147,65 @@ object SessionMemo {
     */
   def tableFingerprint(s: SparkSession, sfDir: String,
       table: String): String =
-    fingerprintWith(sfDir, table, s.sessionState.newHadoopConf())
+    fingerprintWith(tablePath(sfDir, table), s.sessionState.newHadoopConf())
+
+  /** [[tableFingerprint]] of an arbitrary file or directory (a scan's
+    * root path), resolved through this session's Hadoop conf. */
+  private[graft] def pathFingerprint(s: SparkSession, path: String): String =
+    fingerprintWith(new Path(path), s.sessionState.newHadoopConf())
+
+  private def tablePath(sfDir: String, table: String): Path =
+    new Path(new Path(sfDir), table + ".parquet")
 
   /** Short-TTL fingerprint cache: a 286-query sweep calls
     * [[tableFingerprint]] several times per query (every
-    * `Tables.load` plus every silver-memo key), and each call paid a
-    * recursive listing even when the plan/silver memo it keyed was a
-    * hit — a pure listing tax. Entries expire after
-    * `graft.fingerprint.ttlMs` (default 5000 ms; 0 disables), so
-    * invalidation semantics on rewrite are unchanged beyond that
-    * window: a table rewritten in place fingerprints fresh on the
-    * first call after expiry, exactly as before. The window is a
-    * deliberate staleness bound — within one sweep's back-to-back
-    * queries the corpus is immutable, and a deployment rewriting
-    * tables mid-flight sets the TTL to 0.
+    * `Tables.load` plus every memo key), and each call paid a
+    * recursive listing even when the memo it keyed was a hit — a pure
+    * listing tax. Entries expire after [[FingerprintTtlNanos]] (5 s),
+    * so a table rewritten in place fingerprints fresh on the first
+    * call after expiry. The window is a deliberate staleness bound —
+    * within one sweep's back-to-back queries the corpus is immutable —
+    * and a writer that rewrites a table mid-session and needs the
+    * change seen at once calls [[invalidate]].
     */
   private val fpCache =
     new ConcurrentHashMap[String, (Long, String)]()
 
-  private def fpTtlNanos: Long =
-    java.lang.Long.getLong("graft.fingerprint.ttlMs", 5000L) * 1000000L
+  private val FingerprintTtlNanos = 5000L * 1000000L
 
   /** Drop every cached fingerprint (test hook + [[invalidate]]). */
   private[graft] def expireFingerprints(): Unit = fpCache.clear()
 
-  private def fingerprintWith(sfDir: String, table: String,
-      conf: org.apache.hadoop.conf.Configuration): String = {
-    val ttl = fpTtlNanos
+  private def fingerprintWith(path: Path, conf: Configuration): String = {
     // the cache key carries the conf's filesystem identity: two
     // sessions whose confs resolve the same path string to DIFFERENT
     // filesystems (fs.defaultFS divergence -- the axis that changes
     // which bytes a relative/unqualified path names) must not serve
-    // each other's cached fingerprints. NUL separators keep the key
-    // collision-free for any legal path characters ('|' is legal in
-    // a path; NUL is not). Divergences the key cannot see (per-scheme
-    // endpoint remaps, credential-dependent views of one URI) are the
-    // documented reason such deployments set graft.fingerprint.ttlMs
-    // to 0.
-    val ck = conf.get("fs.defaultFS", "file:///") + "\u0000" +
-      sfDir + "\u0000" + table
-    if (ttl > 0L) {
-      val hit = fpCache.get(ck)
-      if (hit != null && System.nanoTime() - hit._1 < ttl) return hit._2
-    }
-    val fp = fingerprintUncached(sfDir, table, conf)
-    if (ttl > 0L) fpCache.put(ck, (System.nanoTime(), fp))
+    // each other's cached fingerprints. NUL separates the parts: it is
+    // legal in no path, so the key is collision-free. Divergences the
+    // key cannot see (per-scheme endpoint remaps, credential-dependent
+    // views of one URI) are bounded by the TTL, or closed at once by
+    // [[invalidate]].
+    val ck = conf.get("fs.defaultFS", "file:///") + "\u0000" + path
+    val hit = fpCache.get(ck)
+    if (hit != null && System.nanoTime() - hit._1 < FingerprintTtlNanos)
+      return hit._2
+    val fp = fingerprintUncached(path, conf)
+    fpCache.put(ck, (System.nanoTime(), fp))
     fp
   }
 
-  private def fingerprintUncached(sfDir: String, table: String,
-      conf: org.apache.hadoop.conf.Configuration): String = {
-    val path = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(sfDir), table + ".parquet")
+  private def fingerprintUncached(path: Path, conf: Configuration): String = {
     val fs = path.getFileSystem(conf)
     val qual = fs.makeQualified(path)
-    def statHash(st: org.apache.hadoop.fs.FileStatus): Long =
+    def statHash(st: FileStatus): Long =
       st.getPath.getName.hashCode * 1000003L ^
         st.getModificationTime ^ (st.getLen * 31L)
     val h =
       if (!fs.exists(qual)) 0L
       else {
         val root = fs.getFileStatus(qual)
-        if (root.isFile
-            || java.lang.Boolean.getBoolean("graft.fingerprint.shallow"))
-          statHash(root)
+        if (root.isFile) statHash(root)
         else {
           val it = fs.listFiles(qual, true)
           val files = scala.collection.mutable.ArrayBuffer.empty[
@@ -212,18 +221,19 @@ object SessionMemo {
     qual.toString + "@" + java.lang.Long.toHexString(h)
   }
 
-  /** Evict (and optionally unpersist) sibling entries of `key`: same
-    * prefix up to the LAST '@' (i.e. same memo kind + table path),
-    * different fingerprint suffix. Without this, a table rewritten in
-    * place mid-session keys a fresh build but the superseded build's
-    * persisted blocks stay pinned until invalidate/context stop —
-    * repeated rewrites would accumulate dead cached frames. Keys
-    * embedding several fingerprints evict on the LAST table's rewrite
-    * only (the earlier fingerprints are part of the prefix); that
-    * residual leak is bounded by rewrites of the non-final table.
+  /** Evict sibling entries of `key`, handing each evicted value to
+    * `release`: same prefix up to the LAST '@' (i.e. same memo kind +
+    * table path), different fingerprint suffix. Without this, a table
+    * rewritten in place mid-session keys a fresh build but the
+    * superseded build's persisted blocks stay pinned until
+    * invalidate/context stop — repeated rewrites would accumulate dead
+    * cached frames. Keys embedding several fingerprints evict on the
+    * LAST table's rewrite only (the earlier fingerprints are part of
+    * the prefix); that residual leak is bounded by rewrites of the
+    * non-final table.
     */
-  private def evictSiblings(per: ConcurrentHashMap[String, DataFrame],
-      key: String, unpersist: Boolean): Unit = {
+  private def evictSiblings[V](per: ConcurrentHashMap[String, V],
+      key: String)(release: V => Unit): Unit = {
     val at = key.lastIndexOf('@')
     if (at < 0) return
     val prefix = key.substring(0, at + 1)
@@ -234,9 +244,8 @@ object SessionMemo {
       if (k != key && k.startsWith(prefix)) stale += k
     }
     stale.foreach { k =>
-      val df = per.remove(k)
-      if (df != null && unpersist)
-        try df.unpersist(blocking = false) catch { case _: Throwable => () }
+      val v = per.remove(k)
+      if (v != null) release(v)
     }
   }
 
@@ -244,20 +253,19 @@ object SessionMemo {
     * key returns the SAME persisted frame; unpersist via
     * [[invalidate]] or context stop.
     *
-    * The builder runs OUTSIDE the map's bin lock (the
-    * `Pairs.probeCache` posture): several memoized silvers run eager
-    * Spark jobs in their builders (the components fixpoint's
-    * per-round localCheckpoints, the wide-form min/max probe), and
-    * `computeIfAbsent` would hold the bin lock for the build's whole
-    * duration — minutes at scale — stalling every concurrent memo
-    * user hashing into the same bin. The race cost is an occasional
-    * duplicate build whose loser is unpersisted immediately.
+    * The builder runs OUTSIDE the map's bin lock: several memoized
+    * silvers run eager Spark jobs in their builders (the components
+    * fixpoint's per-round localCheckpoints), and `computeIfAbsent`
+    * would hold the bin lock for the build's whole duration — minutes
+    * at scale — stalling every concurrent memo user hashing into the
+    * same bin. The race cost is an occasional duplicate build whose
+    * loser is unpersisted immediately.
     */
   def getOrBuild(s: SparkSession, key: String)(
       build: => DataFrame): DataFrame = {
     val per = memos.computeIfAbsent(idOf(s),
       _ => new ConcurrentHashMap[String, DataFrame]())
-    evictSiblings(per, key, unpersist = true)
+    evictSiblings(per, key)(unpersistBestEffort)
     val hit = per.get(key)
     if (hit != null) return hit
     val built = build.persist()
@@ -272,37 +280,33 @@ object SessionMemo {
       // recomputing forever. Distinct plans (e.g. localCheckpoint
       // builders, whose RDD-backed plans are unique per build) hold
       // separate entries and the loser's must be dropped or it leaks.
-      val distinctPlan =
-        try !built.queryExecution.analyzed.sameResult(
-          prior.queryExecution.analyzed)
-        catch { case _: Throwable => false }
-      if (distinctPlan)
-        try built.unpersist(blocking = false)
-        catch { case _: Throwable => () }
+      val distinctPlan = bestEffort("comparing race-loser plans", false)(
+        !built.queryExecution.analyzed.sameResult(
+          prior.queryExecution.analyzed))
+      if (distinctPlan) unpersistBestEffort(built)
       prior
     } else built
   }
 
-  /** Memoize an UNPERSISTED plan (no storage blocks — just the
-    * analyzed logical plan) under (session, key). Used by
-    * [[Tables.load]] to cache resolved parquet relations: re-reading
-    * a table otherwise re-lists files and re-reads footers on every
-    * query, a fixed per-query planning tax that dwarfs cheap queries
-    * at 224-query sweep scale. Cleared with [[invalidate]] / context
-    * stop like the persisted memos.
+  /** Memoize an UNPERSISTED value under (session, key): a resolved
+    * plan (no storage blocks — [[Tables.load]]'s parquet relations,
+    * whose re-reading otherwise re-lists files and re-reads footers on
+    * every query), or any small per-corpus result whose computation
+    * costs Spark jobs (routing stats, a resolved route, a trained merge
+    * list, a probe verdict). Same build-outside-the-lock, putIfAbsent
+    * and sibling-eviction rules as [[getOrBuild]]; cleared with
+    * [[invalidate]] / context stop. Callers give each value kind its
+    * own key prefix, so one key never names two types.
     */
-  def getOrBuildPlan(s: SparkSession, key: String)(
-      build: => DataFrame): DataFrame = {
-    val per = plans.computeIfAbsent(idOf(s),
-      _ => new ConcurrentHashMap[String, DataFrame]())
-    evictSiblings(per, key, unpersist = false)
-    // same build-outside-the-lock posture as getOrBuild: resolving a
-    // parquet relation lists files and reads footers — not a Spark
-    // job, but still I/O a bin lock shouldn't serialize
+  def getOrCompute[T <: AnyRef](s: SparkSession, key: String)(
+      build: => T): T = {
+    val per = values.computeIfAbsent(idOf(s),
+      _ => new ConcurrentHashMap[String, AnyRef]())
+    evictSiblings(per, key)(_ => ())
     val hit = per.get(key)
-    if (hit != null) return hit
+    if (hit != null) return hit.asInstanceOf[T]
     val built = build
     val prior = per.putIfAbsent(key, built)
-    if (prior != null) prior else built
+    (if (prior != null) prior else built).asInstanceOf[T]
   }
 }

@@ -20,7 +20,7 @@ object Tables {
     * cache can never serve a stale file index.
     */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    SessionMemo.getOrBuildPlan(spark,
+    SessionMemo.getOrCompute(spark,
       "scan|" + SessionMemo.tableFingerprint(spark, sfDir, name))(
       spark.read.parquet(s"$sfDir/$name.parquet"))
 

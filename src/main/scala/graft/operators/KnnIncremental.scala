@@ -267,7 +267,7 @@ object KnnIncremental {
     * dir; a deployment points `build`/`append` at shared storage).
     */
   def knnEdgesIncremental(s: SparkSession, d: String): DataFrame = {
-    val served = graft.engine.SessionMemo.getOrBuildPlan(s,
+    val served = graft.engine.SessionMemo.getOrCompute(s,
       "knn_edges_incremental|" +
         graft.engine.SessionMemo.tableFingerprint(s, d, "embeddings")) {
       val dir = java.nio.file.Files

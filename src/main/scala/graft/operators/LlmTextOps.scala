@@ -518,45 +518,32 @@ object LlmTextOps {
     def estPairs: Double = p.toDouble * p.toDouble / (2.0 * bHat)
   }
 
-  /** Corpus routing stats, memoized per (session, canonical corpus
-    * dir): the verdicts are properties of the corpus, and re-paying
-    * the tokenize+shingle stats scan on every invocation is exactly
-    * what a 100 TB deployment wouldn't do (the needsWideForm cache
-    * posture — a corpus rewritten in place mid-session can yield
-    * stale stats, which only costs the measured wall difference
-    * between output-identical formulations, never correctness).
+  /** Corpus routing stats, memoized in [[graft.engine.SessionMemo]]
+    * per (session, `documents` fingerprint): the verdicts are
+    * properties of the corpus, and re-paying the tokenize+shingle stats
+    * scan on every invocation is exactly what a 100 TB deployment
+    * wouldn't do. A corpus rewritten in place fingerprints fresh and
+    * re-measures.
     */
   private[graft] def corpusPairStats(s: SparkSession,
-      d: String): CorpusPairStats = {
-    val key = new java.io.File(d).getCanonicalPath
-    val per = statsCache.computeIfAbsent(s,
-      _ => new java.util.concurrent.ConcurrentHashMap[String,
-        CorpusPairStats]())
-    val cached = per.get(key)
-    if (cached != null) return cached
-    // ONE stats job, not two: the dominant cost is the tokenize +
-    // shingle-hash scan feeding the sets, so all routing axes read
-    // from a single exploded pass. n̂ (docs) rides an HLL at
-    // rsd = 0.02 (explicit — the default is 5%) — a ±2% count cannot
-    // move a decision whose crossovers carry order-of-magnitude
-    // margins, and exact n would cost either a second scan (the old
-    // shape) or a count-distinct shuffle.
-    val r = shingleHashSets(s, d)
-      .select(col("doc_id"), explode(col("hs")).as("shh"))
-      .agg(
-        count(lit(1)).as("p"),
-        approx_count_distinct(col("doc_id"), 0.02).as("n"),
-        approx_count_distinct(col("shh"), 0.02).as("b")).head()
-    val stats = CorpusPairStats(r.getLong(0), r.getLong(1),
-      math.max(1L, r.getLong(2)))
-    per.putIfAbsent(key, stats)
-    stats
-  }
-
-  private val statsCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, CorpusPairStats]]())
+      d: String): CorpusPairStats =
+    graft.engine.SessionMemo.getOrCompute(s, "pair_stats|" +
+      graft.engine.SessionMemo.tableFingerprint(s, d, "documents")) {
+      // ONE stats job, not two: the dominant cost is the tokenize +
+      // shingle-hash scan feeding the sets, so all routing axes read
+      // from a single exploded pass. n̂ (docs) rides an HLL at
+      // rsd = 0.02 (explicit — the default is 5%) — a ±2% count cannot
+      // move a decision whose crossovers carry order-of-magnitude
+      // margins, and exact n would cost either a second scan (the old
+      // shape) or a count-distinct shuffle.
+      val r = shingleHashSets(s, d)
+        .select(col("doc_id"), explode(col("hs")).as("shh"))
+        .agg(
+          count(lit(1)).as("p"),
+          approx_count_distinct(col("doc_id"), 0.02).as("n"),
+          approx_count_distinct(col("shh"), 0.02).as("b")).head()
+      CorpusPairStats(r.getLong(0), r.getLong(1), math.max(1L, r.getLong(2)))
+    }
 
   private[graft] def nearDupJoinForm(s: SparkSession, d: String,
       pairStreamBudget: Long = NearDupPairStreamBudget): String = {
@@ -566,33 +553,18 @@ object LlmTextOps {
     if (st.estPairs >= pairStreamBudget) "prefix" else "counted"
   }
 
-  /** Session conf overriding [[dedupNearAuto]]'s routing:
-    * `auto` (default) runs the corpus-stats pass; `counted`/`prefix`
-    * pin the form and skip the stats jobs entirely — for plan-only
-    * consumers, and for deployments where the silver write already
-    * measured the corpus (the `spark.graft.pairs.wideForm` pattern).
-    */
-  val NearDupFormConf = "spark.graft.neardup.form"
-
   /** [[dedupNear]] with the join form auto-selected per corpus: the
     * AllPairs prefix formulation for long documents (k̄ ≥ 100) or
     * large estimated pair streams (≥ 10M), the counted formulation
     * otherwise. Both forms emit the identical exact pair set
     * (DedupPropertiesSpec pins all three equal), so the choice is
-    * purely a cost decision — this entry point makes it from corpus
-    * stats instead of asking the user to know the crossover, with
-    * [[NearDupFormConf]] as the stats-free escape hatch.
+    * purely a cost decision — this entry point makes it from the
+    * memoized corpus stats instead of asking the user to know the
+    * crossover.
     */
   def dedupNearAuto(s: SparkSession, d: String): DataFrame =
-    s.conf.get(NearDupFormConf, "auto") match {
-      case "counted" => dedupNear(s, d)
-      case "prefix"  => dedupNearPrefix(s, d)
-      case "auto" =>
-        if (nearDupJoinForm(s, d) == "prefix") dedupNearPrefix(s, d)
-        else dedupNear(s, d)
-      case other => throw new IllegalArgumentException(
-        s"$NearDupFormConf must be auto|counted|prefix, got '$other'")
-    }
+    if (nearDupJoinForm(s, d) == "prefix") dedupNearPrefix(s, d)
+    else dedupNear(s, d)
 
   /** `dedup_survivors` — the dedup *output*: one survivor per
     * near-dup group, greedy keep-smallest-id policy (a doc survives
@@ -827,11 +799,9 @@ object LlmTextOps {
     // re-planning adds driver latency to EVERY round of an iterative
     // loop (measured ~20% of fixpoint wall at sf0.1, and the same
     // per-round barrier cost applies at any scale).
-    // `spark.graft.components.aqeRounds = true` keeps AQE on.
     val aqeKey = "spark.sql.adaptive.enabled"
     val aqePrev = s.conf.getOption(aqeKey)
-    if (!s.conf.get("spark.graft.components.aqeRounds", "false").toBoolean)
-      s.conf.set(aqeKey, "false")
+    s.conf.set(aqeKey, "false")
     var stable = false
     var iter = 0
     try {
@@ -1150,9 +1120,9 @@ object LlmTextOps {
     * (default) routes on the corpus-stats doc count; `exact` pins the
     * exact co-occurrence silver ([[dedupNearPairs]]); `minhash` pins
     * the banded-and-exactly-verified source
-    * ([[minhashVerifiedPairs]]). The [[NearDupFormConf]] precedent,
-    * one level up: that conf picks between two EXACT formulations,
-    * this one swaps the candidate-generation strategy itself.
+    * ([[minhashVerifiedPairs]]). Where [[dedupNearAuto]] picks
+    * between two EXACT formulations, this conf swaps the
+    * candidate-generation strategy itself.
     */
   val PairSourceConf = "spark.graft.pairs.source"
 
@@ -4572,31 +4542,18 @@ object LlmTextOps {
 
   /** The trained merge list itself — the [[BpeMergeRounds]] argmax
     * loop factored out of [[bpeMerges]] so [[bpeEncode]] can APPLY
-    * the same tokenizer. Memoized per (session, corpus fingerprint):
+    * the same tokenizer. Memoized in [[graft.engine.SessionMemo]] per
+    * (session, corpus fingerprint):
     * the list is 12 tuples, but producing it costs one corpus scan
     * plus 12 aggregate jobs — two registered consumers
-    * (`bpe_merges`, `bpe_encode`) must not pay that twice (the
-    * corpusPairStats posture — the merges are a corpus property).
+    * (`bpe_merges`, `bpe_encode`) must not pay that twice (the merges,
+    * like [[corpusPairStats]], are a corpus property).
     */
   private[graft] def bpeTrainMerges(s: SparkSession,
-      d: String): Seq[(Int, String, String, Long)] = {
-    val key = "bpe_merges|" +
-      graft.engine.SessionMemo.tableFingerprint(s, d, "documents")
-    val per = bpeMergesCache.computeIfAbsent(s,
-      _ => new java.util.concurrent.ConcurrentHashMap[String,
-        Seq[(Int, String, String, Long)]]())
-    val cached = per.get(key)
-    if (cached != null) return cached
-    val trained = bpeTrainMergesUncached(s, d)
-    per.putIfAbsent(key, trained)
-    trained
-  }
-
-  private val bpeMergesCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String,
-          Seq[(Int, String, String, Long)]]]())
+      d: String): Seq[(Int, String, String, Long)] =
+    graft.engine.SessionMemo.getOrCompute(s, "bpe_merges|" +
+      graft.engine.SessionMemo.tableFingerprint(s, d, "documents"))(
+      bpeTrainMergesUncached(s, d))
 
   /** One greedy merge of pair (l, r) over the space-joined symbol
     * form, via the DOUBLE-SPACE trick: a naive non-overlapping

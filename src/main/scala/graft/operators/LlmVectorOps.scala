@@ -437,29 +437,17 @@ object LlmVectorOps {
     * FIVE consumers share the edge silver (`knn_edges`,
     * `pagerank_docs`, `hits_scores`, `degree_assortativity`,
     * `label_propagation`) and each would re-pay it on every memo HIT
-    * — so the resolved route memoizes per corpus fingerprint (the
-    * same fingerprint the edge memo itself keys on, so an in-place
-    * corpus rewrite re-resolves exactly when the memo rebuilds).
-    * Entries are two short strings; the map outlives sessions by
-    * design — a fingerprint is session-independent and the route is a
-    * pure function of it.
+    * — so the resolved route memoizes in [[graft.engine.SessionMemo]]
+    * per (session, corpus fingerprint) — the same fingerprint the edge
+    * memo itself keys on, so an in-place corpus rewrite re-resolves
+    * exactly when the memo rebuilds.
     */
-  private val knnRouteMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[graft] def knnSourceRoute(s: SparkSession, d: String): String = {
-    val fp = graft.engine.SessionMemo.tableFingerprint(s, d, "embeddings")
-    val hit = knnRouteMemo.get(fp)
-    if (hit != null) hit
-    else {
-      // count outside the map lock (the SessionMemo builder posture)
-      val r =
-        if (Tables.embeddings(s, d).count() >= KnnSourceCrossoverVecs) "ivf"
-        else "exact"
-      val prior = knnRouteMemo.putIfAbsent(fp, r)
-      if (prior != null) prior else r
+  private[graft] def knnSourceRoute(s: SparkSession, d: String): String =
+    graft.engine.SessionMemo.getOrCompute(s, "knn_route|" +
+      graft.engine.SessionMemo.tableFingerprint(s, d, "embeddings")) {
+      if (Tables.embeddings(s, d).count() >= KnnSourceCrossoverVecs) "ivf"
+      else "exact"
     }
-  }
 
   /** The EXACT directed top-3 cosine kNN edge set (src, dst): the
     * compiled broadcast-corpus scan (functions.CosineScan) — (r6
@@ -573,7 +561,7 @@ object LlmVectorOps {
     * lean on the in-session memo.
     */
   private def knnEdges3(s: SparkSession, d: String): DataFrame = {
-    servedSilverDir(s, d, KnnEdgesDirConf, KnnEdgesFile) match {
+    servedSilverDir(s, d, s.conf.get(KnnEdgesDirConf, ""), KnnEdgesFile) match {
       case Some(dir) =>
         // storage-backed serving: every consumer (and every power-
         // iteration round) reads the parquet scan — blocks live in
@@ -587,7 +575,7 @@ object LlmVectorOps {
         // otherwise keep serving the first corpus's eagerly-listed
         // file set even after servedSilverDir re-verified the new
         // fingerprint.
-        graft.engine.SessionMemo.getOrBuildPlan(s,
+        graft.engine.SessionMemo.getOrCompute(s,
           s"knn_edges3_stored|$dir|" +
             graft.engine.SessionMemo.tableFingerprint(s, d, "embeddings"))(
           s.read.parquet(s"$dir/$KnnEdgesFile"))
@@ -2510,7 +2498,7 @@ object LlmVectorOps {
     * self-provisioned demo dir.
     */
   def knnEdgesServed(s: SparkSession, d: String): DataFrame = {
-    val served = graft.engine.SessionMemo.getOrBuildPlan(s,
+    val served = graft.engine.SessionMemo.getOrCompute(s,
       "knn_edges_served|" +
         graft.engine.SessionMemo.tableFingerprint(s, d, "embeddings")) {
       val dir = java.nio.file.Files
@@ -4196,16 +4184,16 @@ object LlmVectorOps {
     * `d` (both driver-side metadata probes, no job). */
   private def annIndexDir(s: SparkSession, d: String,
       marker: String): Option[String] =
-    servedSilverDir(s, d, AnnIndexConf, marker)
+    servedSilverDir(s, d, s.conf.get(AnnIndexConf, ""), marker)
 
-  /** The shared per-corpus silver-dir resolution ([[AnnIndexConf]]
-    * and [[KnnEdgesDirConf]] both use it): `<conf base>/<corpus dir
-    * basename>`, served only when `marker` exists AND the stored
-    * corpus fingerprint matches `d`. Missing base/marker/fingerprint
-    * or a mismatch ⇒ None (inline fallback, never an error). */
+  /** The shared per-corpus silver-dir resolution ([[AnnIndexConf]],
+    * [[KnnEdgesDirConf]] and the `_served` gate index all use it):
+    * `<base>/<corpus dir basename>`, served only when `marker` exists
+    * AND the stored corpus fingerprint matches `d`. Empty base,
+    * missing marker/fingerprint or a mismatch ⇒ None (inline
+    * fallback, never an error). */
   private def servedSilverDir(s: SparkSession, d: String,
-      confKey: String, marker: String): Option[String] = {
-    val base = s.conf.get(confKey, "")
+      base: String, marker: String): Option[String] = {
     if (base.isEmpty) None
     else {
       val dir = new org.apache.hadoop.fs.Path(base,
@@ -4256,9 +4244,7 @@ object LlmVectorOps {
     */
   def similarityTopkPq(s: SparkSession, d: String): DataFrame =
     annIndexDir(s, d, "codebook.parquet") match {
-      case Some(dir) => similarityTopkPqFromIndex(s, d,
-        s.read.parquet(s"$dir/codebook.parquet"),
-        s.read.parquet(s"$dir/codes.parquet"))
+      case Some(dir) => graft.pipeline.CorpusSilver.similarityTopkPq(s, d, dir)
       case None =>
         val e = withNorm(s, Tables.embeddings(s, d), "embedding", "norm")
         val book = pqCodebook(s, e)
@@ -4412,40 +4398,35 @@ object LlmVectorOps {
     * silver index, serve) was only spec-pinned (PqIndexSpec), never
     * driver-gated. Each call builds the silver index ONCE per
     * (session, corpus) into a managed temp dir
-    * (`CorpusSilver.writeAnnIndex` — memoized, removed on JVM exit),
-    * resolves the conf at plan time, and returns the index-served
-    * plan; deterministic training makes stored ≡ inline, so the SAME
-    * DuckDB oracles gate both formulations.
+    * (`CorpusSilver.writeAnnIndex` — memoized, removed on JVM exit)
+    * and serves from it directly, without touching [[AnnIndexConf]];
+    * deterministic training makes stored ≡ inline, so the SAME DuckDB
+    * oracles gate both formulations.
     */
   def similarityTopkPqServed(s: SparkSession, d: String): DataFrame =
-    servedFromGateIndex(s, d, "codebook.parquet", similarityTopkPq)
+    graft.pipeline.CorpusSilver.similarityTopkPq(s, d,
+      gateIndexDir(s, d, "codebook.parquet"))
 
   def similarityIvfPqServed(s: SparkSession, d: String): DataFrame =
-    servedFromGateIndex(s, d, "coarse.parquet", similarityIvfPq)
+    similarityIvfPqFromIndex(s, d, gateIndexDir(s, d, "coarse.parquet"))
 
-  private def servedFromGateIndex(s: SparkSession, d: String,
-      marker: String,
-      q: (SparkSession, String) => DataFrame): DataFrame = {
+  /** This session's gate-index dir for corpus `d`, through the same
+    * marker + fingerprint gate as [[AnnIndexConf]] serving. A miss
+    * fails loudly instead of silently gating the inline path twice. */
+  private def gateIndexDir(s: SparkSession, d: String,
+      marker: String): String = {
     val base = gateIndexBase(s, d)
-    val prev = s.conf.getOption(AnnIndexConf)
-    s.conf.set(AnnIndexConf, base)
-    try {
-      // the conf is read at PLAN time (annIndexDir resolves in the
-      // match), so restoring it below cannot flip the returned plan
-      // back to inline — but a resolution miss here would: fail
-      // loudly instead of silently gating the inline path twice
-      require(annIndexDir(s, d, marker).isDefined,
-        s"gate index at $base did not resolve for $d")
-      q(s, d)
-    } finally prev match {
-      case Some(v) => s.conf.set(AnnIndexConf, v)
-      case None => s.conf.unset(AnnIndexConf)
-    }
+    val dir = servedSilverDir(s, d, base, marker)
+    require(dir.isDefined, s"gate index at $base did not resolve for $d")
+    dir.get
   }
 
   /** One silver-index build per (session, canonical corpus) for the
-    * `_served` gate rows; weak session keying (the Pairs.probeCache
-    * pattern) and a shutdown-hook cleanup for the temp tree.
+    * `_served` gate rows; weak session keying and a shutdown-hook
+    * cleanup for the temp tree. Kept apart from
+    * [[graft.engine.SessionMemo]] on purpose: the entry owns a
+    * directory on disk, and [[graft.engine.SessionMemo.invalidate]]
+    * must not force a rebuild of the index.
     */
   private val gateIndexMemo =
     java.util.Collections.synchronizedMap(

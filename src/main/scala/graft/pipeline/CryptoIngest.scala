@@ -37,18 +37,10 @@ object CryptoIngest {
     * this batch; a batch covering only some hours of a date leaves that
     * date's other hours untouched.
     */
-  def flushHourly(ticks: DataFrame, path: String): Unit = {
-    val spark = ticks.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      ReferenceOps.ohlcAgg(ticks)
-        .write.partitionBy("date", "hour").mode("overwrite").parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+  def flushHourly(ticks: DataFrame, path: String): Unit =
+    ReferenceOps.ohlcAgg(ticks)
+      .write.partitionBy("date", "hour").mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").parquet(path)
 
   /** JDBC twin of `flushHourly` for users migrating straight off the
     * reference's Postgres sink (`dataCollector.py:140-163`): same

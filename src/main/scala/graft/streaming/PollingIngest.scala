@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -56,8 +58,10 @@ object PollingIngest {
     * callers/tests can deregister it.
     */
   def stopOnShutdown(job: Job): Thread = {
-    val t = new Thread(
-      () => try job.stop() catch { case _: Throwable => () },
+    val t = new Thread(() =>
+      try job.stop()
+      catch { case NonFatal(e) =>
+        System.err.println(s"[graft] PollingIngest: shutdown stop failed: $e") },
       "graft-polling-shutdown")
     Runtime.getRuntime.addShutdownHook(t)
     t

@@ -129,26 +129,6 @@ class DedupPropertiesSpec extends AnyFunSuite {
     }
   }
 
-  test("spark.graft.neardup.form pins the join form regardless of corpus stats") {
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .sortBy(t => (t._1, t._2)).toSeq
-    try {
-      // auto on this corpus picks counted; forcing prefix must still
-      // emit the identical exact pair set (pure cost decision)
-      spark.conf.set(LlmTextOps.NearDupFormConf, "prefix")
-      assert(rows(LlmTextOps.dedupNearAuto(spark, sf)) ==
-        rows(LlmTextOps.dedupNearPrefix(spark, sf)))
-      spark.conf.set(LlmTextOps.NearDupFormConf, "counted")
-      assert(rows(LlmTextOps.dedupNearAuto(spark, sf)) ==
-        rows(LlmTextOps.dedupNear(spark, sf)))
-      spark.conf.set(LlmTextOps.NearDupFormConf, "bogus")
-      intercept[IllegalArgumentException] {
-        LlmTextOps.dedupNearAuto(spark, sf)
-      }
-    } finally spark.conf.unset(LlmTextOps.NearDupFormConf)
-  }
-
   test("a filtered narrow probe does not poison the wide-form cache for the full table") {
     import spark.implicits._
     val base = 1L << 31
@@ -170,22 +150,6 @@ class DedupPropertiesSpec extends AnyFunSuite {
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     }
-  }
-
-  test("spark.graft.pairs.wideForm bypasses the construction-time probe") {
-    import spark.implicits._
-    val conf = graft.engine.Pairs.WideFormConf
-    // a frame that CANNOT be probed without failing makes the bypass
-    // observable: if the conf short-circuits, no job ever runs
-    val unprobeable = Seq(1L).toDF("doc_id")
-      .withColumn("doc_id",
-        expr("CASE WHEN doc_id = 1 THEN assert_true(false) ELSE 0L END"))
-    try {
-      spark.conf.set(conf, "wide")
-      assert(graft.engine.Pairs.needsWideForm(unprobeable, "doc_id"))
-      spark.conf.set(conf, "packed")
-      assert(!graft.engine.Pairs.needsWideForm(unprobeable, "doc_id"))
-    } finally spark.conf.unset(conf)
   }
 
   test("component labels are idempotent: relabeling the star edges is a no-op") {

@@ -297,6 +297,51 @@ class EngineUtilSpec extends AnyFunSuite {
     }
   }
 
+  test("a table rewritten in place is seen fresh after invalidate or fingerprint expiry") {
+    import graft.engine.{Pairs, SessionMemo, Tables}
+    import graft.operators.LlmTextOps
+    // a child session, so invalidate() leaves the shared session's
+    // silver memos alone
+    val s = spark.newSession()
+    val tmp = java.nio.file.Files.createTempDirectory("graft-memo-rewrite")
+    val docs = tmp.resolve("documents.parquet").toString
+    // every doc has a verbatim twin (ids 2k and 2k+1 share a text), so
+    // the minhash bands emit candidate pairs: under a stale packed-form
+    // verdict, ids >= 2^32 make PackedPairs fail the job
+    def rewrite(ids: Seq[Long]): Unit =
+      ids.map { id =>
+        val t = s"alpha beta gamma delta tok${id / 2} word${id / 2} end"
+        (id, t, "en", "web", t.length.toLong)
+      }.toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.mode("overwrite").parquet(docs)
+    // p (total postings: 5 distinct 3-shingles per 7-token doc) is
+    // exact; the doc count n is an HLL estimate (rsd 2%)
+    def check(n: Long, wide: Boolean): Unit = {
+      val st = LlmTextOps.corpusPairStats(s, tmp.toString)
+      assert(st.p == 5 * n && math.abs(st.n - n) <= n / 20, st)
+      assert(Pairs.needsWideForm(Tables.documents(s, tmp.toString), "doc_id")
+        == wide)
+      assert(LlmTextOps.dedupMinhash(s, tmp.toString).count() == n / 2)
+    }
+    try {
+      rewrite(Seq(2L, 3L, 4L))
+      assert(LlmTextOps.corpusPairStats(s, tmp.toString).p == 15)
+      assert(!Pairs.needsWideForm(Tables.documents(s, tmp.toString), "doc_id"))
+      assert(LlmTextOps.dedupMinhash(s, tmp.toString).count() == 1)
+      // 3 docs -> 60 docs, ids past 2^32
+      rewrite((0L until 60L).map(i => (1L << 32) + i))
+      SessionMemo.invalidate(s)
+      check(60, wide = true)
+      // rewritten again: fingerprint expiry alone re-keys every value
+      rewrite(0L until 10L)
+      SessionMemo.expireFingerprints()
+      check(10, wide = false)
+    } finally {
+      SessionMemo.invalidate(s)
+      org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
+    }
+  }
+
   test("orderBaskets memo survives repeat calls and yields identical baskets") {
     // the basket silver must serve the same persisted frame across
     // consumers (basket_pairs + item_neighbors) and equal a fresh
