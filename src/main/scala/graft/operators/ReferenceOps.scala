@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -54,19 +54,28 @@ object ReferenceOps {
   def ohlcAgg(ticks: DataFrame): DataFrame =
     ticks
       .groupBy(date_trunc("hour", col("ts")).as("hour_ts"), col("symbol"))
-      .agg(
-        min_by(col("price"), col("ts")).as("open_price"),
-        max(col("price")).as("high_price"),
-        min(col("price")).as("low_price"),
-        max_by(col("price"), col("ts")).as("close_price"),
-        r6(avg(col("price"))).as("avg_price"),
-        count(lit(1)).as("sample_count"))
-      .select(
-        to_date(col("hour_ts")).as("date"),
-        hour(col("hour_ts")).as("hour"),
-        col("symbol"), col("open_price"), col("high_price"),
-        col("low_price"), col("close_price"), col("avg_price"),
-        col("sample_count"))
+      .agg(ohlcColumns.head, ohlcColumns.tail: _*)
+      .select(hourlyRow(col("hour_ts")): _*)
+
+  /** The six candle aggregates over (ts, price) — the one definition
+    * of the hourly candle, shared by the batch [[ohlcAgg]] and the
+    * streaming `StreamingOhlc.hourlyOhlcOnWatermarked`.
+    */
+  val ohlcColumns: Seq[Column] = Seq(
+    min_by(col("price"), col("ts")).as("open_price"),
+    max(col("price")).as("high_price"),
+    min(col("price")).as("low_price"),
+    max_by(col("price"), col("ts")).as("close_price"),
+    r6(avg(col("price"))).as("avg_price"),
+    count(lit(1)).as("sample_count"))
+
+  /** The `downsampled_prices` row (`dataCollector.py:62-75`) of a
+    * candle keyed by the start of its hour.
+    */
+  def hourlyRow(hourStart: Column): Seq[Column] = Seq(
+    to_date(hourStart).as("date"), hour(hourStart).as("hour"),
+    col("symbol"), col("open_price"), col("high_price"), col("low_price"),
+    col("close_price"), col("avg_price"), col("sample_count"))
 
   /** `ohlc_daily` — hierarchical re-aggregation: daily OHLC derived
     * FROM the hourly aggregate, not from raw ticks. open/close pick
@@ -137,12 +146,7 @@ object ReferenceOps {
         r6(sum(col("sdec")).cast(DecimalType(24, 6)).cast("double")
           / sum(col("n"))).as("avg_price"),
         sum(col("n")).as("sample_count"))
-      .select(
-        to_date(col("hour_ts")).as("date"),
-        hour(col("hour_ts")).as("hour"),
-        col("symbol"), col("open_price"), col("high_price"),
-        col("low_price"), col("close_price"), col("avg_price"),
-        col("sample_count"))
+      .select(hourlyRow(col("hour_ts")): _*)
       .orderBy("date", "hour", "symbol")
   }
 
@@ -208,19 +212,8 @@ object ReferenceOps {
   def hourRollover(s: SparkSession, d: String): DataFrame = {
     val t = Tables.ticks(s, d)
     val lastHour = t.agg(date_trunc("hour", max(col("ts"))).as("open_hour"))
-    t.join(broadcast(lastHour), date_trunc("hour", col("ts")) < col("open_hour"))
-      .groupBy(date_trunc("hour", col("ts")).as("hour_ts"), col("symbol"))
-      .agg(
-        min_by(col("price"), col("ts")).as("open_price"),
-        max(col("price")).as("high_price"),
-        min(col("price")).as("low_price"),
-        max_by(col("price"), col("ts")).as("close_price"),
-        r6(avg(col("price"))).as("avg_price"),
-        count(lit(1)).as("sample_count"))
-      .select(
-        to_date(col("hour_ts")).as("date"), hour(col("hour_ts")).as("hour"),
-        col("symbol"), col("open_price"), col("high_price"), col("low_price"),
-        col("close_price"), col("avg_price"), col("sample_count"))
+    ohlcAgg(t.join(broadcast(lastHour),
+      date_trunc("hour", col("ts")) < col("open_hour")))
       .orderBy("date", "hour", "symbol")
   }
 

@@ -2,7 +2,7 @@ package graft.streaming
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -74,14 +74,7 @@ object PollingIngest {
       hourlyPath: String,
       checkpointRoot: String,
       trigger: Trigger = Trigger.ProcessingTime("5 seconds")): Job = {
-    // both sinks consume the watermark-deduped tick stream, so a
-    // repeated (symbol, ts) fetch neither duplicates the raw layer nor
-    // inflates an hourly sample_count — the two layers stay consistent
-    def ticks = StreamingOhlc.dedupStream(TickSource.parseApiPayload(
-      spark.readStream.schema(TickSource.landingSchema).json(landingDir),
-      col("payload"), col("fetch_ts")))
-
-    val raw = ticks
+    val raw = ticks(spark, landingDir)
       .withColumn("date", to_date(col("ts")))
       .writeStream
       .format("parquet")
@@ -92,10 +85,7 @@ object PollingIngest {
       .trigger(trigger)
       .start()
 
-    val hourly = StreamingOhlc.hourlyOhlcOnWatermarked(ticks)
-      .withColumn("date", to_date(col("window_start")))
-      .withColumn("hour", hour(col("window_start")))
-      .drop("window_start")
+    val hourly = StreamingOhlc.hourlyOhlcOnWatermarked(ticks(spark, landingDir))
       .writeStream
       .format("parquet")
       .option("path", hourlyPath)
@@ -123,17 +113,10 @@ object PollingIngest {
       checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
       table: String = "downsampled_prices",
-      afterStage: () => Unit = () => ()): StreamingQuery = {
-    val ticks = StreamingOhlc.dedupStream(TickSource.parseApiPayload(
-      spark.readStream.schema(TickSource.landingSchema).json(landingDir),
-      col("payload"), col("fetch_ts")))
-    StreamingOhlc.hourlyOhlcOnWatermarked(ticks)
-      .withColumn("date", to_date(col("window_start")))
-      .withColumn("hour", hour(col("window_start")))
-      .select("date", "hour", "symbol", "open_price", "high_price",
-        "low_price", "close_price", "avg_price", "sample_count")
+      afterStage: () => Unit = () => ()): StreamingQuery =
+    StreamingOhlc.hourlyOhlcOnWatermarked(ticks(spark, landingDir))
       .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty)
           graft.pipeline.CryptoIngest.upsertHourlyRows(batch, jdbcUrl, table,
             afterStage)
@@ -142,5 +125,14 @@ object PollingIngest {
       .outputMode("append")
       .trigger(trigger)
       .start()
-  }
+
+  /** The landing directory as a watermark-deduped tick stream. Every
+    * sink consumes this, so a repeated (symbol, ts) fetch neither
+    * duplicates the raw layer nor inflates an hourly sample_count —
+    * the layers stay consistent.
+    */
+  private def ticks(spark: SparkSession, landingDir: String): DataFrame =
+    StreamingOhlc.dedupStream(TickSource.parseApiPayload(
+      spark.readStream.schema(TickSource.landingSchema).json(landingDir),
+      col("payload"), col("fetch_ts")))
 }

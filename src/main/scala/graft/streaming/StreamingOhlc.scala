@@ -2,13 +2,12 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.engine.Determinism.r6
+import graft.operators.ReferenceOps.{hourlyRow, ohlcColumns}
 
-/** Streaming twins of the reference pipeline (SURVEY.md §2.2 S1/S2).
+/** Streaming twins of the reference pipeline (SURVEY.md §2.2 S1/S3/S4/S6).
   *
   * The reference is a hand-rolled streaming job: a 5 s poll loop
   * (`dataCollector.py:17,220`), per-symbol in-memory OHLC state
@@ -24,21 +23,6 @@ object StreamingOhlc {
   /** A tick as the reference builds it (`dataCollector.py:110-114`). */
   case class Tick(ts: Timestamp, symbol: String, price: Double)
 
-  /** The reference's `running_metrics` dict (`dataCollector.py:21-29`)
-    * as an explicit state type for S2.
-    */
-  case class OhlcState(
-      openTs: Long, open: Double, high: Double, low: Double,
-      closeTs: Long, close: Double, sum: Double, count: Long)
-
-  /** One flushed row per (window, symbol) — the shape of
-    * `downsampled_prices` (`dataCollector.py:62-75`).
-    */
-  case class OhlcRow(
-      symbol: String, windowStart: Timestamp,
-      open_price: Double, high_price: Double, low_price: Double,
-      close_price: Double, avg_price: Double, sample_count: Long)
-
   /** S1 `streaming_ohlc` — watermark + tumbling window + append mode.
     * Late ticks beyond 10 min are dropped (the reference can't see
     * late data at all: event time is assigned at fetch,
@@ -51,20 +35,16 @@ object StreamingOhlc {
   /** The S1 aggregation body over a stream whose watermark is already
     * set upstream (redefining a watermark is disallowed when chaining
     * stateful operators, e.g. dedup → window agg in PollingIngest).
+    * The candle is `ReferenceOps`' own, so a closed hour emits the
+    * batch `ohlcAgg` row (date, hour, symbol, open … sample_count).
+    * The key is the `window` struct, not `window.start`: append mode
+    * needs the watermarked column in the grouping key.
     */
   def hourlyOhlcOnWatermarked(ticks: DataFrame): DataFrame =
     ticks
       .groupBy(window(col("ts"), "1 hour"), col("symbol"))
-      .agg(
-        min_by(col("price"), col("ts")).as("open_price"),
-        max(col("price")).as("high_price"),
-        min(col("price")).as("low_price"),
-        max_by(col("price"), col("ts")).as("close_price"),
-        r6(avg(col("price"))).as("avg_price"),
-        count(lit(1)).as("sample_count"))
-      .select(col("window.start").as("window_start"), col("symbol"),
-        col("open_price"), col("high_price"), col("low_price"),
-        col("close_price"), col("avg_price"), col("sample_count"))
+      .agg(ohlcColumns.head, ohlcColumns.tail: _*)
+      .select(hourlyRow(col("window.start")): _*)
 
   /** S3 `streaming_sessionize` — gap-based session windows on a
     * stream: the E16 batch sessionization as a native
@@ -132,60 +112,5 @@ object StreamingOhlc {
         && col("click_ts") < col("purchase_ts"),
       "left_outer")
       .select(col("user_id"), col("purchase_ts"), col("click_ts"))
-  }
-
-  /** S2 `streaming_state` — the reference's state machine made
-    * explicit: `flatMapGroupsWithState` keyed by (symbol, hour),
-    * carrying `OhlcState` (== the dict at `dataCollector.py:21-29`),
-    * update logic == `update_running_metrics`
-    * (`dataCollector.py:80-94`), flush-on-timeout == the hour
-    * rollover + reset (`dataCollector.py:166-191`). Event-time
-    * timeout fires when the watermark passes the window end.
-    */
-  def statefulOhlcStream(ticks: Dataset[Tick]): Dataset[OhlcRow] = {
-    import ticks.sparkSession.implicits._
-    val hourMs = 3600L * 1000L
-
-    def update(
-        key: (String, Long), rows: Iterator[Tick],
-        state: GroupState[OhlcState]): Iterator[OhlcRow] = {
-      if (state.hasTimedOut) {
-        // window closed: flush one row and reset (drop) the state —
-        // the reference's store_downsampled_data + reset_running_metrics
-        val st = state.get
-        state.remove()
-        Iterator.single(OhlcRow(
-          key._1, new Timestamp(key._2),
-          st.open, st.high, st.low, st.close,
-          // Determinism.r6 formula (half-up), NOT rint (half-to-even):
-          // on an exact 6 dp tie the batch twin would disagree
-          math.floor(st.sum / st.count * 1e6 + 0.5) / 1e6, st.count))
-      } else {
-        var st = state.getOption.getOrElse(
-          OhlcState(Long.MaxValue, 0.0, Double.MinValue, Double.MaxValue,
-            Long.MinValue, 0.0, 0.0, 0L))
-        rows.foreach { t =>
-          val ms = t.ts.getTime
-          // first-by-time open / last-by-time close (true argmin/argmax,
-          // not the reference's falsy-zero check at dataCollector.py:83)
-          if (ms < st.openTs) st = st.copy(openTs = ms, open = t.price)
-          if (ms > st.closeTs) st = st.copy(closeTs = ms, close = t.price)
-          st = st.copy(
-            high = math.max(st.high, t.price),
-            low = math.min(st.low, t.price),
-            sum = st.sum + t.price, count = st.count + 1L)
-        }
-        state.update(st)
-        // flush when the watermark passes the end of this hour window
-        state.setTimeoutTimestamp(key._2 + hourMs)
-        Iterator.empty
-      }
-    }
-
-    ticks
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(t => (t.symbol, t.ts.getTime / hourMs * hourMs))
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
   }
 }

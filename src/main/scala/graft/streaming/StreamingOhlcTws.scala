@@ -35,15 +35,14 @@ import org.apache.spark.sql.streaming._
   * even when it is still inside the watermark delay. Candles are
   * therefore arrival-order dependent across the hour boundary: this
   * operator trades watermark-completeness for the reference's
-  * emit-on-rollover latency. The WATERMARK-COMPLETE contract is
-  * implemented alongside it as S26 [[ohlcStreamComplete]]
-  * ([[CompleteOhlcProcessor]]): hours live in a `MapState[Long, Hour]`
-  * and close ONLY via `handleExpiredTimer`, so any tick at or above
-  * the watermark folds into its hour no matter what arrived in
-  * between — candles are arrival-order independent at the price of
-  * one watermark-delay of latency per candle (StreamingSpec S26 pins
-  * the two contracts against each other on the exact cross-boundary
-  * reordering this paragraph describes).
+  * emit-on-rollover latency. The WATERMARK-COMPLETE contract is S1
+  * [[StreamingOhlc.hourlyOhlcStream]]: a tumbling-window aggregate
+  * that closes an hour only when the watermark passes its end, so
+  * any tick at or above the watermark folds into its hour no matter
+  * what arrived in between — candles are arrival-order independent
+  * at the price of one watermark-delay of latency per candle
+  * (StreamingSpec S26 pins the two contracts against each other on
+  * the exact cross-boundary reordering this paragraph describes).
   *
   * Requires the RocksDB state-store provider (the transformWithState
   * contract in Spark 4); StreamingSpec S25 sets it per query, and
@@ -65,16 +64,12 @@ object StreamingOhlcTws {
 
   private val HourMs = 3600000L
 
-  /** Open a fresh hour candle from a tick — the single definition
-    * both processors share, so the two machines cannot drift on
-    * intra-hour semantics.
-    */
+  /** Open a fresh hour candle from a tick. */
   private def openHour(hr: Long, t: Tick, ms: Long): Hour =
     Hour(hr, t.price, t.price, t.price, t.price, ms, 1L)
 
   /** Fold a tick into an open candle: high/low extremes, close =
-    * latest BY EVENT TIME (not arrival order). Shared by both
-    * processors — see [[openHour]].
+    * latest BY EVENT TIME (not arrival order).
     */
   private def foldTick(cur: Hour, t: Tick, ms: Long): Hour =
     Hour(cur.hourMs, cur.open,
@@ -142,70 +137,6 @@ object StreamingOhlcTws {
       .withWatermark("ts", "10 minutes")
       .groupByKey(_.symbol)
       .transformWithState(new OhlcProcessor, TimeMode.EventTime(),
-        OutputMode.Append())
-  }
-
-  /** S26 `streaming_ohlc_complete` — the WATERMARK-COMPLETE candle
-    * machine (the class contract the eager [[OhlcProcessor]] trades
-    * away; see the drop-window paragraph above): per-symbol hours
-    * live in a `MapState[hourMs, Hour]`, every tick at or above the
-    * watermark folds into ITS hour regardless of arrival order, and
-    * an hour emits ONLY when its event-time timer fires — i.e. when
-    * the watermark proves no eligible tick can still arrive. State
-    * bound: each entry retires exactly when its timer fires, so a
-    * symbol's map holds the hours strictly between the GLOBAL
-    * watermark and that symbol's own event-time frontier — on an
-    * aligned feed that is ≤ 2 entries (open hour + one that raced
-    * ahead of the watermark delay), but the honest bound is the
-    * cross-symbol event-time SKEW: the watermark is a stream-global
-    * minimum, so a symbol running h hours ahead of the slowest
-    * symbol holds ~h open entries until the laggard advances it.
-    * Size RocksDB budgets to the feed's skew, not the watermark
-    * delay; the map still never grows with stream LENGTH.
-    */
-  class CompleteOhlcProcessor extends StatefulProcessor[String, Tick, Candle] {
-    @transient private var hours: MapState[Long, Hour] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      hours = getHandle.getMapState[Long, Hour]("hours",
-        Encoders.scalaLong, Encoders.product[Hour], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[Tick],
-        timerValues: TimerValues): Iterator[Candle] = {
-      rows.foreach { t =>
-        val ms = t.ts.getTime
-        val hr = ms - ms % HourMs
-        if (!hours.containsKey(hr)) {
-          hours.updateValue(hr, openHour(hr, t, ms))
-          getHandle.registerTimer(hr + HourMs)
-        } else {
-          hours.updateValue(hr, foldTick(hours.getValue(hr), t, ms))
-        }
-      }
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[Candle] = {
-      val hr = expiredTimerInfo.getExpiryTimeInMs - HourMs
-      if (hours.containsKey(hr)) {
-        val h = hours.getValue(hr)
-        hours.removeKey(hr)
-        Iterator.single(Candle(key, new Timestamp(h.hourMs), h.open,
-          h.high, h.low, h.close, h.n))
-      } else Iterator.empty
-    }
-  }
-
-  /** [[CompleteOhlcProcessor]] wired: watermarked ticks → candles
-    * closed exactly at watermark-past-hour-end, append mode.
-    */
-  def ohlcStreamComplete(ticks: Dataset[Tick]): Dataset[Candle] = {
-    import ticks.sparkSession.implicits._
-    ticks
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.symbol)
-      .transformWithState(new CompleteOhlcProcessor, TimeMode.EventTime(),
         OutputMode.Append())
   }
 }

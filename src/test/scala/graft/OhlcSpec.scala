@@ -18,33 +18,6 @@ class OhlcSpec extends AnyFunSuite {
     rows.toDF("tss", "symbol", "price")
       .selectExpr("CAST(tss AS TIMESTAMP) AS ts", "symbol", "price")
 
-  test("OhlcAggregator merge is order/partition-insensitive (associativity property)") {
-    import graft.functions.OhlcAggregator
-    val rnd = new scala.util.Random(23)
-    (1 to 50).foreach { trial =>
-      val n = 1 + rnd.nextInt(60)
-      // unique timestamps: first/last are well-defined
-      val ticks = rnd.shuffle((0 until n).toList)
-        .map(i => (i.toLong * 1000L, math.rint(rnd.nextDouble() * 1e7) / 100))
-      val single = OhlcAggregator.finish(
-        ticks.foldLeft(OhlcAggregator.zero)(OhlcAggregator.reduce))
-      // random partitioning, chunks merged in random order
-      val nChunks = 1 + rnd.nextInt(5)
-      val chunks = ticks.groupBy(_ => rnd.nextInt(nChunks)).values.toList
-      val bufs = rnd.shuffle(chunks.map(
-        _.foldLeft(OhlcAggregator.zero)(OhlcAggregator.reduce)))
-      val merged = OhlcAggregator.finish(
-        bufs.foldLeft(OhlcAggregator.zero)(OhlcAggregator.merge))
-      assert((merged.open_price, merged.high_price, merged.low_price,
-        merged.close_price, merged.sample_count)
-        == (single.open_price, single.high_price, single.low_price,
-          single.close_price, single.sample_count), s"trial $trial")
-      // fp sum reassociates across partitions: avg exact only to ~ulp
-      assert(math.abs(merged.avg_price - single.avg_price)
-        <= math.abs(single.avg_price) * 1e-12, s"trial $trial avg")
-    }
-  }
-
   test("3-tick golden vector (tests.py:103-117)") {
     // prices [50000, 51000, 49000] in ts order within one hour
     val out = ReferenceOps.ohlcAgg(ticksDf(Seq(

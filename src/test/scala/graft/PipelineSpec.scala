@@ -5,8 +5,6 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.OhlcAggregator
-import graft.operators.ReferenceOps
 import graft.pipeline.CryptoIngest
 
 /** End-to-end pipeline semantics (raw landing, idempotent hourly
@@ -274,43 +272,5 @@ class PipelineSpec extends AnyFunSuite {
       .dedupComponents(spark, TestSpark.sf0001)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(ccSilver == ccInline)
-  }
-
-  test("OhlcAggregator (typed UDAF) matches the built-in ohlcAgg") {
-    val rnd = new scala.util.Random(11)
-    val rows = (0 until 500).map { i =>
-      (f"2024-01-01 ${10 + i % 3}%02d:${(i * 7) % 60}%02d:${(i * 13) % 60}%02d",
-        s"S${i % 4}", math.rint(rnd.nextDouble() * 1e7) / 100)
-    }.distinctBy(t => (t._1, t._2)) // unique (ts, symbol): tie-break-free
-    val df = ticksDf(rows)
-    // avg excluded from exact compare: builtin rounds HALF_UP, the
-    // aggregator reports the raw mean — checked with tolerance below.
-    val viaAggregator = df
-      .withColumn("hour_ts", date_trunc("hour", col("ts")))
-      .as[(java.sql.Timestamp, String, Double, java.sql.Timestamp)]
-      .groupByKey { case (_, sym, _, hourTs) => (hourTs.getTime, sym) }
-      .mapValues { case (ts, _, price, _) => (ts.getTime * 1000L, price) }
-      .agg(OhlcAggregator.toColumn.name("ohlc"))
-      .collect()
-      .map { case ((hourMs, sym), o) =>
-        (sym, hourMs) -> (o.open_price, o.high_price, o.low_price,
-          o.close_price, o.avg_price, o.sample_count)
-      }.toMap
-    val viaBuiltin = ReferenceOps.ohlcAgg(df).collect().map { r =>
-      val hourMs = java.sql.Timestamp.valueOf(
-        f"${r.getAs[java.sql.Date]("date")} ${r.getAs[Int]("hour")}%02d:00:00")
-        .getTime
-      (r.getAs[String]("symbol"), hourMs) -> (r.getAs[Double]("open_price"),
-        r.getAs[Double]("high_price"), r.getAs[Double]("low_price"),
-        r.getAs[Double]("close_price"), r.getAs[Double]("avg_price"),
-        r.getAs[Long]("sample_count"))
-    }.toMap
-    assert(viaAggregator.keySet == viaBuiltin.keySet)
-    viaAggregator.foreach { case (k, a) =>
-      val b = viaBuiltin(k)
-      assert((a._1, a._2, a._3, a._4, a._6) == (b._1, b._2, b._3, b._4, b._6),
-        s"OHLC mismatch at $k: $a vs $b")
-      assert(math.abs(a._5 - b._5) < 1e-6, s"avg mismatch at $k")
-    }
   }
 }

@@ -9,10 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingOhlc
 import graft.streaming.StreamingOhlc.Tick
 
-/** S1/S2 streaming twins (SURVEY.md §2.2): watermarked tumbling-window
-  * OHLC and the explicit flatMapGroupsWithState state machine, driven
-  * by MemoryStream — window rows appear once closed, late data is
-  * dropped past the watermark.
+/** Streaming twins (SURVEY.md §2.2), driven by MemoryStream: the
+  * watermarked tumbling-window OHLC and the other stateful operators —
+  * window rows appear once closed, late data is dropped past the
+  * watermark.
   */
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -37,10 +37,11 @@ class StreamingSpec extends AnyFunSuite {
       // an hour-13 tick pushes the watermark past hour 10 + 10 min
       in.addData(Tick(ts("2024-01-01 13:00:00"), "BTCUSDT", 48000.0))
       q.processAllAvailable()
-      val rows = spark.sql("SELECT * FROM s1_out ORDER BY window_start").collect()
+      val rows = spark.sql("SELECT * FROM s1_out ORDER BY date, hour").collect()
       assert(rows.length == 1)
       val r = rows.head
-      assert(r.getAs[Timestamp]("window_start") == ts("2024-01-01 10:00:00"))
+      assert(r.getAs[java.sql.Date]("date") == java.sql.Date.valueOf("2024-01-01"))
+      assert(r.getAs[Int]("hour") == 10)
       assert(r.getAs[Double]("open_price") == 50000.0)
       assert(r.getAs[Double]("close_price") == 49000.0)
       assert(r.getAs[Double]("high_price") == 51000.0)
@@ -51,6 +52,41 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       assert(spark.sql("SELECT * FROM s1_out").count() == 1)
     } finally q.stop()
+  }
+
+  test("S1 streaming_ohlc: two symbols in one hour close into one row each") {
+    // each symbol closes into its own row, with the reference's
+    // running mean (dataCollector.py:91-94) as avg_price
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val in2 = MemoryStream[Tick]
+    val q2 = StreamingOhlc.hourlyOhlcStream(in2.toDF())
+      .writeStream.format("memory").queryName("s1_two_symbols")
+      .outputMode(OutputMode.Append).start()
+    try {
+      in2.addData(
+        Tick(ts("2024-01-01 10:00:05"), "BTCUSDT", 50000.0),
+        Tick(ts("2024-01-01 10:00:10"), "BTCUSDT", 51000.0),
+        Tick(ts("2024-01-01 10:00:15"), "BTCUSDT", 49000.0),
+        Tick(ts("2024-01-01 10:00:20"), "ETHUSDT", 3000.0))
+      q2.processAllAvailable()
+      assert(spark.sql("SELECT * FROM s1_two_symbols").count() == 0)
+      in2.addData(Tick(ts("2024-01-01 13:00:00"), "BTCUSDT", 48000.0))
+      q2.processAllAvailable()
+      val rows = spark.sql(
+        "SELECT * FROM s1_two_symbols ORDER BY symbol").collect()
+      assert(rows.length == 2)
+      val btc = rows.head
+      assert(btc.getAs[String]("symbol") == "BTCUSDT")
+      assert(btc.getAs[Int]("hour") == 10)
+      assert(btc.getAs[Double]("open_price") == 50000.0)
+      assert(btc.getAs[Double]("close_price") == 49000.0)
+      assert(btc.getAs[Double]("avg_price") == 50000.0)
+      assert(btc.getAs[Long]("sample_count") == 3L)
+      val eth = rows(1)
+      assert(eth.getAs[String]("symbol") == "ETHUSDT")
+      assert(eth.getAs[Long]("sample_count") == 1L)
+    } finally q2.stop()
   }
 
   test("S1 watermark boundary: window stays open 1 us before close, flushes and drops at exactly it") {
@@ -90,6 +126,9 @@ class StreamingSpec extends AnyFunSuite {
       val flushed = spark.sql(
         "SELECT * FROM s1b_out WHERE symbol = 'BTCUSDT'").collect()
       assert(flushed.length == 1, flushed.mkString("; "))
+      assert(flushed.head.getAs[java.sql.Date]("date")
+        == java.sql.Date.valueOf("2024-01-01"))
+      assert(flushed.head.getAs[Int]("hour") == 10)
       assert(flushed.head.getAs[Long]("sample_count") == 2L,
         "the 1-us-early late tick must be inside the flush")
       assert(flushed.head.getAs[Double]("high_price") == 52000.0)
@@ -100,6 +139,55 @@ class StreamingSpec extends AnyFunSuite {
       assert(spark.sql(
         "SELECT * FROM s1b_out WHERE symbol = 'BTCUSDT'").count() == 1,
         "tick for an exactly-closed window must be dropped")
+    } finally q.stop()
+  }
+
+  test("S1 stream candle == batch ohlcAgg candle on every closed hour (schema and rows)") {
+    // 3 hours x 2 symbols, ticks out of order inside each hour, and a
+    // straggler that arrives after the next hour's ticks but above the
+    // watermark. Prices are multiples of 1/4, so every sum is exact and
+    // avg_price cannot depend on the fold order across micro-batches.
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import graft.operators.ReferenceOps
+    val batches = Seq(
+      Seq(Tick(ts("2024-01-01 10:40:00"), "BTC", 101.25),
+        Tick(ts("2024-01-01 10:05:00"), "BTC", 100.5),
+        Tick(ts("2024-01-01 10:20:00"), "ETH", 20.75),
+        Tick(ts("2024-01-01 10:25:00"), "BTC", 103.0),
+        Tick(ts("2024-01-01 10:10:00"), "ETH", 21.5)),
+      Seq(Tick(ts("2024-01-01 11:08:00"), "BTC", 104.75),
+        Tick(ts("2024-01-01 11:05:00"), "ETH", 22.25),
+        Tick(ts("2024-01-01 11:01:00"), "BTC", 99.0),
+        Tick(ts("2024-01-01 11:03:00"), "ETH", 19.5)),
+      // watermark is 10:58: the hour-10 straggler is above it, so it
+      // must land in hour 10 although hour-11 ticks came first
+      Seq(Tick(ts("2024-01-01 10:59:00"), "BTC", 97.75),
+        Tick(ts("2024-01-01 11:30:00"), "ETH", 24.5),
+        Tick(ts("2024-01-01 11:25:00"), "BTC", 98.25),
+        Tick(ts("2024-01-01 12:50:00"), "BTC", 105.5),
+        Tick(ts("2024-01-01 12:02:00"), "ETH", 23.0),
+        Tick(ts("2024-01-01 12:15:00"), "BTC", 102.0),
+        Tick(ts("2024-01-01 12:45:00"), "ETH", 18.25)),
+      // watermark past 13:00 closes hour 12; hour 13 stays open
+      Seq(Tick(ts("2024-01-01 13:30:00"), "BTC", 100.0)))
+    val in = MemoryStream[Tick]
+    val q = StreamingOhlc.hourlyOhlcStream(in.toDF())
+      .writeStream.format("memory").queryName("s1_vs_batch")
+      .outputMode(OutputMode.Append).start()
+    try {
+      batches.foreach { b => in.addData(b); q.processAllAvailable() }
+      val stream = spark.table("s1_vs_batch")
+      val batch = ReferenceOps.ohlcAgg(batches.flatten.toDF())
+        .where($"hour" < 13)
+      def shape(df: org.apache.spark.sql.DataFrame) =
+        df.schema.map(f => (f.name, f.dataType))
+      assert(shape(stream) == shape(batch),
+        s"${stream.schema.simpleString} vs ${batch.schema.simpleString}")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("date", "hour", "symbol").collect().toSeq
+      assert(rows(batch).length == 6)
+      assert(rows(stream) == rows(batch))
     } finally q.stop()
   }
 
@@ -684,37 +772,6 @@ class StreamingSpec extends AnyFunSuite {
           "bit-exact vs the batch recipe")
       } finally q.stop()
     } finally { ref.unpersist(); () }
-  }
-
-  test("S2 streaming_state: explicit OhlcState flushes on window close (reference state machine)") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val in = MemoryStream[Tick]
-    val q = StreamingOhlc.statefulOhlcStream(in.toDS())
-      .writeStream.format("memory").queryName("s2_out")
-      .outputMode(OutputMode.Append).start()
-    try {
-      in.addData(
-        Tick(ts("2024-01-01 10:00:05"), "BTCUSDT", 50000.0),
-        Tick(ts("2024-01-01 10:00:10"), "BTCUSDT", 51000.0),
-        Tick(ts("2024-01-01 10:00:15"), "BTCUSDT", 49000.0),
-        Tick(ts("2024-01-01 10:00:20"), "ETHUSDT", 3000.0))
-      q.processAllAvailable()
-      assert(spark.sql("SELECT * FROM s2_out").count() == 0)
-      in.addData(Tick(ts("2024-01-01 13:00:00"), "BTCUSDT", 48000.0))
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT * FROM s2_out ORDER BY symbol").collect()
-      assert(rows.length == 2)
-      val btc = rows.head
-      assert(btc.getAs[String]("symbol") == "BTCUSDT")
-      assert(btc.getAs[Double]("open_price") == 50000.0)
-      assert(btc.getAs[Double]("close_price") == 49000.0)
-      assert(btc.getAs[Double]("avg_price") == 50000.0)
-      assert(btc.getAs[Long]("sample_count") == 3L)
-      val eth = rows(1)
-      assert(eth.getAs[String]("symbol") == "ETHUSDT")
-      assert(eth.getAs[Long]("sample_count") == 1L)
-    } finally q.stop()
   }
 
   test("S8 streaming_similarity: probe window closes with the exact ranked top-k") {
@@ -1787,13 +1844,14 @@ class StreamingSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state." +
         "RocksDBStateStoreProvider")
-    // the SAME tick sequence drives both machines: an hour-11 tick
-    // arrives BEFORE an hour-10 straggler that is still inside the
-    // watermark delay — the exact reordering the eager rollover's
+    // the SAME tick sequence drives both machines — S1's tumbling
+    // window (watermark-complete) and S25 (eager rollover): an hour-11
+    // tick arrives BEFORE an hour-10 straggler that is still inside
+    // the watermark delay — the exact reordering the eager rollover's
     // documented drop window loses
     val inC = MemoryStream[Tick]
     val inE = MemoryStream[Tick]
-    val qC = StreamingOhlcTws.ohlcStreamComplete(inC.toDS())
+    val qC = StreamingOhlc.hourlyOhlcStream(inC.toDF())
       .writeStream.format("memory").queryName("s26_complete")
       .outputMode(OutputMode.Append).start()
     val qE = StreamingOhlcTws.ohlcStream(inE.toDS())
@@ -1809,21 +1867,22 @@ class StreamingSpec extends AnyFunSuite {
         Tick(ts("2024-01-01 11:02:00"), "BTC", 200.0))
       // watermark is now 10:52 — hour 10 is NOT yet provably complete
       assert(spark.sql("SELECT * FROM s26_complete").count() == 0,
-        "complete machine must hold hour 10 until the watermark " +
+        "S1 must hold hour 10 until the watermark " +
           "passes 11:00 (the eager one has already emitted it)")
       // the straggler: hour-10 tick, above the 10:52 watermark
       feed(Tick(ts("2024-01-01 10:55:00"), "BTC", 95.0))
       // advance the watermark past every hour end
       feed(Tick(ts("2024-01-01 12:30:00"), "DOGE", 1.0))
       val complete = spark.sql(
-        "SELECT symbol, hour_start, open, high, low, close, n_ticks " +
-          "FROM s26_complete ORDER BY symbol, hour_start").collect()
-        .map(r => (r.getString(0), r.getTimestamp(1), r.getDouble(2),
+        "SELECT symbol, hour, open_price, high_price, low_price, " +
+          "close_price, sample_count FROM s26_complete " +
+          "ORDER BY symbol, date, hour").collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getDouble(2),
           r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getLong(6)))
       assert(complete.toSeq == Seq(
         // the straggler is IN: low 95, event-time close 95, n = 3
-        ("BTC", ts("2024-01-01 10:00:00"), 100.0, 120.0, 95.0, 95.0, 3L),
-        ("BTC", ts("2024-01-01 11:00:00"), 200.0, 200.0, 200.0, 200.0, 1L)),
+        ("BTC", 10, 100.0, 120.0, 95.0, 95.0, 3L),
+        ("BTC", 11, 200.0, 200.0, 200.0, 200.0, 1L)),
         s"watermark-complete candles diverged: ${complete.mkString(",")}")
       val eager = spark.sql(
         "SELECT n_ticks FROM s26_eager " +
