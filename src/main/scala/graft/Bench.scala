@@ -68,8 +68,8 @@ object Bench {
       .map(_.split(",").map(_.trim).toSet)
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
     // SPARK_GRAFT_CONF="k=v,k2=v2" sets session confs before the
-    // sweep — the A/B lever for conf-gated paths (hot-bucket caps,
-    // route pins, ANN index override) without code edits
+    // sweep — the A/B lever for conf-gated paths (route pins, ANN
+    // index override) without code edits
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").map(_.trim)
       .filter(_.nonEmpty).foreach { kv =>
         val Array(k, v) = kv.split("=", 2)

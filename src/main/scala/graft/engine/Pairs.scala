@@ -20,6 +20,10 @@ import org.apache.spark.sql.functions._
   * plan shape, measured ~25% slower on the pair stage) when the
   * packed form cannot hold the ids. DedupPropertiesSpec drives the
   * dedup operators through both forms.
+  *
+  * Buckets are not split: one bucket's C(k,2) pairs explode inside
+  * one task. ScaleSweep's band-bucket occupancy probe measures the
+  * largest k on each corpus.
   */
 object Pairs {
 
@@ -116,104 +120,6 @@ object Pairs {
   def distinctPairs(s: SparkSession, lists: DataFrame, listCol: String,
       wide: Boolean): DataFrame =
     unpack(explodedPairs(s, lists, listCol, wide).distinct(), wide)
-
-  /** Distinct (i, j) pairs from RAW bucket-membership rows (one row
-    * per (bucket, id)), with hot-bucket splitting: a bucket larger
-    * than `hotCap` members would otherwise become ONE task computing
-    * C(k,2) pairs after `collect_list` — at 100 TB a single viral
-    * band bucket is a straggler measured in hours, and the collected
-    * array itself outgrows the aggregation buffer. Members of hot
-    * buckets are hashed into `groups` salt groups; pairs then come
-    * from `groups` intra-group lists (C(k/g, 2) each) plus
-    * C(groups, 2) cross-group list×list rows, repartitioned so each
-    * bounded chunk of the quadratic work is its own task. Cold
-    * buckets ride the exact [[distinctPairs]] plan. Output is
-    * IDENTICAL to the unsplit form (HotBucketSpec pins it, both pair
-    * forms): every unordered pair within a bucket appears in exactly
-    * one branch — same group ⇒ intra, different ⇒ cross.
-    *
-    * Cost when nothing is hot: one tiny bucket-size aggregation plus
-    * a size join the cold groupBy's partitioning reuses — the
-    * detection overhead `heavyHitters`-style observability would pay
-    * anyway. Singleton buckets drop at the size join (the `> 1`
-    * filter the list form applies post-collect).
-    */
-  def distinctPairsFromMembers(s: SparkSession, members: DataFrame,
-      bucketCols: Seq[String], idCol: String, wide: Boolean,
-      hotCap: Int, groups: Int = 16): DataFrame =
-    unpack(explodedPairsFromMembers(s, members, bucketCols, idCol, wide,
-      hotCap, groups).distinct(), wide)
-
-  /** (i, j, `cntName`) co-occurrence counts from raw membership rows
-    * with hot-bucket splitting — the [[countedPairs]] twin of
-    * [[distinctPairsFromMembers]].
-    */
-  def countedPairsFromMembers(s: SparkSession, members: DataFrame,
-      bucketCols: Seq[String], idCol: String, cntName: String,
-      wide: Boolean, hotCap: Int, groups: Int = 16): DataFrame =
-    unpack(explodedPairsFromMembers(s, members, bucketCols, idCol, wide,
-      hotCap, groups)
-      .groupBy(col("p")).agg(count(lit(1)).as(cntName)), wide, col(cntName))
-
-  /** The shared exploded-pair stream of the FromMembers forms —
-    * `private[graft]` so the spec can measure per-task pair counts
-    * with `spark_partition_id` before the distinct collapses them.
-    */
-  private[graft] def explodedPairsFromMembers(s: SparkSession,
-      members: DataFrame, bucketCols: Seq[String], idCol: String,
-      wide: Boolean, hotCap: Int, groups: Int): DataFrame = {
-    require(hotCap > 1, s"hotCap must exceed 1, got $hotCap")
-    require(groups > 1, s"groups must exceed 1, got $groups")
-    val bkey = bucketCols.map(col)
-    val sizes = members.groupBy(bkey: _*).agg(count(lit(1)).as("_bsz"))
-      .where(col("_bsz") > 1)
-    val m = members.join(sizes, bucketCols)
-    val cold = m.where(col("_bsz") <= hotCap)
-      .groupBy(bkey: _*).agg(collect_list(col(idCol)).as("ds"))
-    val coldPairs = explodedPairs(s, cold, "ds", wide)
-    // hot members salt on a hash of the ID (deterministic, id-unique
-    // — the Skew.saltedJoin entropy rule), partitioning each viral
-    // bucket into `groups` disjoint lists
-    val hot = m.where(col("_bsz") > hotCap)
-      .withColumn("_g", pmod(xxhash64(col(idCol)), lit(groups.toLong)))
-    val hotLists = hot.groupBy((bkey :+ col("_g")): _*)
-      .agg(collect_list(col(idCol)).as("ds"))
-    val intra = explodedPairs(s,
-      hotLists.where(size(col("ds")) > 1), "ds", wide)
-    val aSide = hotLists.select(
-      (bkey :+ col("_g").as("_ga") :+ col("ds").as("_dsa")): _*)
-    val bSide = hotLists.select(
-      (bkey :+ col("_g").as("_gb") :+ col("ds").as("_dsb")): _*)
-    // one row per (bucket, group-pair), each carrying two ≤k/g-member
-    // arrays; the repartition spreads a single bucket's C(groups, 2)
-    // quadratic chunks across tasks instead of leaving them hashed
-    // together on the bucket key
-    val cross = aSide.join(bSide, bucketCols)
-      .where(col("_ga") < col("_gb"))
-      .repartition((bkey ++ Seq(col("_ga"), col("_gb"))): _*)
-      .select(explode(col("_dsa")).as("_x"), col("_dsb"))
-      .select(col("_x"), explode(col("_dsb")).as("_y"))
-      .select(crossPair(wide).as("p"))
-    coldPairs.union(intra).union(cross)
-  }
-
-  /** Order one cross-group (x, y) into the branch-shared pair shape.
-    * The packed form re-checks the 31-bit precondition inline: unlike
-    * the list branches (PackedPairs fails fast inside the
-    * expression), a silent overflow here would emit WRONG pairs, not
-    * an error.
-    */
-  private def crossPair(wide: Boolean): org.apache.spark.sql.Column =
-    if (wide)
-      struct(least(col("_x"), col("_y")).as("i"),
-        greatest(col("_x"), col("_y")).as("j"))
-    else
-      expr(s"""CASE WHEN _x BETWEEN 0 AND ${Int.MaxValue}
-                     AND _y BETWEEN 0 AND ${Int.MaxValue}
-               THEN shiftleft(least(_x, _y), 32) + greatest(_x, _y)
-               ELSE CAST(raise_error(
-                 'packed cross pair requires ids in [0, 2^31)') AS BIGINT)
-               END""")
 
   /** (i, j, `cntName`) pair co-occurrence counts from posting lists —
     * the Jaccard-numerator shape (a pair appears once per shared

@@ -15,17 +15,6 @@ import graft.engine.Tables
   */
 object LlmTextOps {
 
-  /** Session conf opting the banded-LSH candidate generation into
-    * hot-bucket splitting (engine.Pairs.distinctPairsFromMembers):
-    * band buckets with more members than this cap salt into disjoint
-    * groups so no single task computes a viral bucket's C(k,2)
-    * pairs. 0 (default) = off — the detection pass isn't free, and
-    * every measured corpus's hottest bucket is far below any sane
-    * cap; deployments on boilerplate-heavy crawls set it to the
-    * member count one task should own (e.g. 4096).
-    */
-  val HotBucketCapConf = "spark.graft.lsh.hotBucketCap"
-
   /** Per-document distinct 3-token shingle SET, unexploded — the
     * map-side root of the whole shingle family: set size (the Jaccard
     * denominator) and the MinHash signature both derive from this
@@ -333,10 +322,7 @@ object LlmTextOps {
     // pair generation per shingle posting list instead of a self-join:
     // one shuffle (groupBy shingle hash) + map-side C(k,2) explode.
     // Safe because posting lists are short (hottest shingle: 25 docs
-    // at sf0.1); with real skew, route through the hot-bucket-split
-    // generator instead (engine.Pairs.countedPairsFromMembers — built
-    // for the banded-LSH twin, output-identical, HotBucketSpec-pinned;
-    // here the shingle hash is the bucket). Pairs travel PACKED as one long
+    // at sf0.1). Pairs travel PACKED as one long
     // (i << 32 | j — engine.Pairs / functions.PackedPairs), halving
     // the pair-count shuffle key and skipping per-pair struct rows;
     // past 31-bit doc_ids the generator auto-falls-back to the struct
@@ -992,8 +978,7 @@ object LlmTextOps {
   /** The (doc_id, band, bh) band-bucket membership of a (doc_id, sig)
     * signature frame — the LSH blocking projection shared by the
     * candidate join and the ScaleSweep occupancy probe (which
-    * measures exactly the bucket distribution the join shuffles on,
-    * the hot-bucket evidence feeding [[HotBucketCapConf]]).
+    * measures exactly the bucket distribution the join shuffles on).
     */
   private[graft] def minhashBandMembers(sigs: DataFrame): DataFrame =
     sigs.select(
@@ -1017,29 +1002,15 @@ object LlmTextOps {
     * (band, bh), map-side C(k,2) into packed single longs, distinct
     * on an 8-byte key — no self-join, so there is no replicated build
     * side to outgrow broadcast at 100 TB. Wide doc_ids ride the
-    * struct pair form (engine.Pairs). Corpora with viral band buckets
-    * (boilerplate-heavy crawls: one bucket holding k of the corpus
-    * makes ONE task compute C(k,2) pairs) opt into hot-bucket
-    * splitting via [[HotBucketCapConf]] — members of buckets past the
-    * cap salt into disjoint groups whose intra+cross chunks spread
-    * across tasks, output-identical (HotBucketSpec) at the price of
-    * the bucket-size detection pass.
+    * struct pair form (engine.Pairs).
     */
   private[graft] def minhashCandidateIds(s: SparkSession, sigs: DataFrame,
       wide: Boolean): DataFrame = {
-    val members = minhashBandMembers(sigs)
-      .select(col("doc_id"), col("band"), col("bh"))
-    val hotCap = s.conf.get(HotBucketCapConf, "0").toInt
-    if (hotCap > 0)
-      graft.engine.Pairs.distinctPairsFromMembers(s, members,
-        Seq("band", "bh"), "doc_id", wide, hotCap)
-    else {
-      val lists = members
-        .groupBy(col("band"), col("bh"))
-        .agg(collect_list(col("doc_id")).as("ds"))
-        .where(size(col("ds")) > 1)
-      graft.engine.Pairs.distinctPairs(s, lists, "ds", wide)
-    }
+    val lists = minhashBandMembers(sigs)
+      .groupBy(col("band"), col("bh"))
+      .agg(collect_list(col("doc_id")).as("ds"))
+      .where(size(col("ds")) > 1)
+    graft.engine.Pairs.distinctPairs(s, lists, "ds", wide)
   }
 
   def dedupMinhashFromSignatures(s: SparkSession, rawSigs: DataFrame,
@@ -2597,8 +2568,8 @@ object LlmTextOps {
     * longest_island + 7, exact.
     *
     * Scale: the pair stream is the dedup_near posting-list unit (a
-    * viral boilerplate window = a hot posting list → the
-    * hot-bucket-split generator applies); the diagonal pass shuffles
+    * viral boilerplate window = a hot posting list, one task's
+    * C(k, 2)); the diagonal pass shuffles
     * once on (i, j) and its windows are running frames. At 100 TB,
     * gate candidate pairs through banded MinHash first and run this
     * as the aligner on survivors — the pipeline Lee et al. describe,

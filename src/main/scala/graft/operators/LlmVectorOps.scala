@@ -1586,59 +1586,33 @@ object LlmVectorOps {
     */
   def semdedup(s: SparkSession, d: String): DataFrame = {
     val assigned = semdedupAssigned(s, d)
-    val cap = s.conf.get(SemDedupHotCellCapConf, "0").toInt
     // the REMOVED set is |removals| tiny rows consumed by this row
     // AND dedup_cascade's 5_semantic gate, and the Σ C(cell, 2) pair
     // scan above it re-ran per call (0.55 s/call at sf0.1 — the
     // whole cascade's dominant term). Memoize it like the assignment
-    // it reads (same fingerprint lifecycle); the hot-cell cap joins
-    // the key so a conf-forced cap never serves another cap's entry
-    // (outputs are pinned equal, but the key keeps the contract
-    // structural).
+    // it reads (same fingerprint lifecycle).
     // `assigned` is resolved ABOVE the memo (SessionMemo nesting
     // convention). Ordering is applied on read — the memoized frame
     // is the unordered removed set.
     graft.engine.SessionMemo.getOrBuild(s,
-      "semdedup_removed|" + cap + "|" +
+      "semdedup_removed|" +
         graft.engine.SessionMemo.tableFingerprint(s, d, "embeddings"))(
-      semdedupRemoved(s, assigned, cap)).orderBy("vec_id")
+      semdedupRemoved(s, assigned)).orderBy("vec_id")
   }
 
   /** [[semdedup]]'s removed-set lineage (unordered): the within-cell
     * ε-pair scan + keep-the-outlier rule. */
-  private def semdedupRemoved(s: SparkSession, assigned: DataFrame,
-      cap: Int): DataFrame = {
-    val decorated =
-      if (cap > 0) {
-        // hot-cell-capped pair generation: candidate (i, j) ids come
-        // from the salted FromMembers generator — a Lloyd cell past
-        // the cap splits into disjoint salt groups whose intra+cross
-        // chunks spread across tasks, so no single task owns a viral
-        // cell's C(cell, 2) work; decorations re-attach per CANDIDATE
-        // (two narrow joins), never per cell
-        val wide = graft.engine.Pairs.needsWideForm(assigned, "vec_id")
-        val idPairs = graft.engine.Pairs.distinctPairsFromMembers(s,
-          assigned.select(col("cent_id"), col("vec_id")),
-          Seq("cent_id"), "vec_id", wide, cap)
-        idPairs
-          .join(assigned.select(col("vec_id").as("i"),
-            col("embedding").as("emb_i"), col("norm").as("norm_i"),
-            col("cent_id"), col("cent_sim").as("cs_i")), Seq("i"))
-          .join(assigned.select(col("vec_id").as("j"),
-            col("embedding").as("emb_j"), col("norm").as("norm_j"),
-            col("cent_sim").as("cs_j")), Seq("j"))
-      } else {
-        val x = assigned.select(col("vec_id").as("i"),
-          col("embedding").as("emb_i"), col("norm").as("norm_i"),
-          col("cent_id"), col("cent_sim").as("cs_i"))
-        val y = assigned.select(col("vec_id").as("j"),
-          col("embedding").as("emb_j"), col("norm").as("norm_j"),
-          col("cent_id"), col("cent_sim").as("cs_j"))
-        // the removed member's decoration (cent_id, cent_sim) rides
-        // the pair row itself — no third pass over the assignment
-        x.join(y, Seq("cent_id")).where(col("i") < col("j"))
-      }
-    decorated
+  private def semdedupRemoved(s: SparkSession,
+      assigned: DataFrame): DataFrame = {
+    val x = assigned.select(col("vec_id").as("i"),
+      col("embedding").as("emb_i"), col("norm").as("norm_i"),
+      col("cent_id"), col("cent_sim").as("cs_i"))
+    val y = assigned.select(col("vec_id").as("j"),
+      col("embedding").as("emb_j"), col("norm").as("norm_j"),
+      col("cent_id"), col("cent_sim").as("cs_j"))
+    // the removed member's decoration (cent_id, cent_sim) rides the
+    // pair row itself — no third pass over the assignment
+    x.join(y, Seq("cent_id")).where(col("i") < col("j"))
       .withColumn("cos_sim", r6(
         VectorExprs.dot(s, col("emb_i"), col("emb_j"))
           / (col("norm_i") * col("norm_j"))))
@@ -1654,22 +1628,6 @@ object LlmVectorOps {
       .distinct()
   }
 
-  /** Hot-cell cap for [[semdedup]]'s within-cell pair stream (0 =
-    * off, the default). The SemDeDup pair stream is Σ C(cell, 2):
-    * bounded on a corpus whose k scales with n (the seed stride makes
-    * k = n/[[ivfStride]] here), but ONE viral cell — a boilerplate
-    * cluster, a spam campaign, an embedding-collapse artifact — makes
-    * a single task compute that cell's full quadratic pair set. Past
-    * the cap, cells split through the salted
-    * [[graft.engine.Pairs.distinctPairsFromMembers]] generator
-    * (output-identical — AnnQualitySpec pins capped == uncapped; the
-    * same contract as [[graft.operators.LlmTextOps]]'s LSH hot-bucket
-    * cap). Default off because detection costs a cell-size
-    * aggregation per run and the measured corpora top out at
-    * single-digit cell occupancy over the cap's natural values.
-    */
-  val SemDedupHotCellCapConf = "spark.graft.semdedup.hotCellCap"
-
   /** The keep-1 Lloyd-cell assignment with the r6-fenced centroid
     * sim, embedding carried for the pair cosine — memoized per
     * (session, embeddings fingerprint): the n·k broadcast-assignment
@@ -1684,10 +1642,8 @@ object LlmVectorOps {
     val trained = trainedCentroids(s, d)
     def build: DataFrame = {
       // vec_id normalized to LONG at the assignment (not per consumer):
-      // the capped pair path's packed expressions type-check
-      // array<bigint>, and normalizing here keeps semdedup's OUTPUT
-      // schema identical whether the hot-cell cap is on or off for an
-      // INT32 embeddings table (a conf must never change a schema)
+      // semdedup's OUTPUT schema stays LONG for an INT32 embeddings
+      // table
       val e = withNorm(s,
         Tables.embeddings(s, d)
           .withColumn("vec_id", col("vec_id").cast("long")),

@@ -592,9 +592,9 @@ object RelationalOps {
     * `triangle_count` wedge budget. The support floor is the dial
     * that keeps the graph (and so the wedge volume) sparse as
     * orders grow; bestseller hubs make wedge counts quadratic in
-    * THEIR degree only — at 100 TB cap per-hub adjacency (the
-    * hot-bucket-split posture) before the self-join. The top-20 is
-    * TakeOrderedAndProject, never a global sort.
+    * THEIR degree only — at 100 TB cap per-hub adjacency before the
+    * self-join. The top-20 is TakeOrderedAndProject, never a global
+    * sort.
     */
   /** The co-purchase graph's edge silver: part pairs co-ordered in
     * ≥ 2 orders, off the memoized basket silver. Referenced five
@@ -716,9 +716,9 @@ object RelationalOps {
     *
     * Scale shape: edges come off the memoized [[coPurchaseEdges]]
     * silver; wedges are Σ C(deg k, 2) rows (the `triangle_count`
-    * budget, hub-capped at 100 TB via the hot-bucket-split posture)
-    * probed against the edge set in one join; the top-20 is
-    * TakeOrderedAndProject, never a global sort.
+    * budget, hub-capped at 100 TB) probed against the edge set in
+    * one join; the top-20 is TakeOrderedAndProject, never a global
+    * sort.
     */
   def clusteringCoeff(s: SparkSession, d: String): DataFrame = {
     val e = coPurchaseEdges(s, d)
@@ -755,9 +755,9 @@ object RelationalOps {
     * exact integers off the SAME wedge stream adamic_adar already
     * rides (one oriented adjacency self-join per common neighbor,
     * Σ C(deg k, 2) rows — the `triangle_count` wedge budget,
-    * hub-capped at 100 TB via the hot-bucket-split posture) plus the
-    * broadcast degree table. One fenced division; top-20 under a
-    * TOTAL order (1e-6-grid jaccard desc, then the pair).
+    * hub-capped at 100 TB) plus the broadcast degree table. One
+    * fenced division; top-20 under a TOTAL order (1e-6-grid jaccard
+    * desc, then the pair).
     */
   def jaccardNeighbors(s: SparkSession, d: String): DataFrame = {
     val e = coPurchaseEdges(s, d)

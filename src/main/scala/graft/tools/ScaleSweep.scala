@@ -486,9 +486,9 @@ object ScaleSweep {
     simSigs.unpersist()
 
     // band-bucket occupancy of the minhash LSH blocking: the
-    // distribution the candidate join shuffles on, and the evidence
-    // feeding the hot-bucket cap (a max far below any sane cap means
-    // the default-off conf is the right posture at this corpus shape)
+    // distribution the candidate join shuffles on. One task owns a
+    // bucket's C(kmax, 2) pairs, so a viral kmax here is the skew that
+    // would justify bringing a hot-bucket split back
     val occ = graft.operators.LlmTextOps.minhashBandMembers(
         graft.operators.LlmTextOps.minhashSignatures(spark, outDir)
           .select(col("doc_id").cast("long").as("doc_id"), col("sig")))
@@ -527,10 +527,10 @@ object ScaleSweep {
     val substrRoute =
       graft.operators.LlmTextOps.substrSourceRoute(spark, outDir)
 
-    // Lloyd-cell occupancy of the semdedup assignment — the skew
-    // evidence behind spark.graft.semdedup.hotCellCap: the pair
-    // stream is Σ C(cell, 2), so kmax is the straggler bound (one
-    // task owns C(kmax, 2) pairs until the cap splits it)
+    // Lloyd-cell occupancy of the semdedup assignment: the pair
+    // stream is Σ C(cell, 2) and one task owns a cell's C(kmax, 2)
+    // pairs, so a viral kmax here is the skew that would justify
+    // bringing a hot-cell split back
     val cellOcc = graft.operators.LlmVectorOps
       .semdedupAssigned(spark, outDir)
       .groupBy(col("cent_id")).agg(count(lit(1)).as("k"))

@@ -299,89 +299,27 @@ class AnnQualitySpec extends AnyFunSuite {
     assert(got.nonEmpty, "vacuous semdedup pin at sf0.001")
   }
 
-  test("semdedup hot-cell cap: capped pair generation == uncapped output") {
-    // the Σ C(cell, 2) bound: past the cap a Lloyd cell splits through
-    // the salted FromMembers generator — the OUTPUT must be identical
-    // (full row set, not just ids: cent_id and cent_sim decorations
-    // re-attach per candidate on the capped path)
-    val d = TestSpark.sf0001
-    def rows(): Seq[String] =
-      LlmVectorOps.semdedup(spark, d).collect().map(_.toString).toSeq
-    val uncapped = rows()
-    assert(uncapped.nonEmpty, "vacuous cap pin")
-    // cap = 2 forces EVERY multi-member cell through the hot split
-    // (the sf0.001 cells hold up to dozens of members), so the salted
-    // intra+cross branches — not the cold path — produce the pairs
-    spark.conf.set(LlmVectorOps.SemDedupHotCellCapConf, "2")
-    try {
-      val capped = rows()
-      assert(capped == uncapped,
-        s"capped semdedup diverged: ${capped.size} vs ${uncapped.size} rows")
-    } finally spark.conf.unset(LlmVectorOps.SemDedupHotCellCapConf)
-    // a cap no cell reaches must also be output-identical (cold path)
-    spark.conf.set(LlmVectorOps.SemDedupHotCellCapConf, "1000000")
-    try assert(rows() == uncapped,
-      "an unreached cap must leave the output unchanged")
-    finally spark.conf.unset(LlmVectorOps.SemDedupHotCellCapConf)
-  }
-
-  test("semdedup hot-cell cap spreads a viral cell across tasks") {
-    // skewed-cell evidence: a corpus whose embeddings all collapse to
-    // (nearly) one direction lands in ONE Lloyd cell; with the cap on,
-    // the exploded pair stream of that cell must occupy many tasks
-    // instead of one (the 100 TB straggler this conf exists to kill)
+  test("semdedup on one viral cell removes all but the lowest vec_id") {
+    // a corpus whose embeddings all share one direction lands in ONE
+    // Lloyd cell: the pair stream is that cell's full C(512, 2) and
+    // every centroid sim ties, so the keep-the-outlier rule's vec_id
+    // tie-break keeps only vec_id 0
     import spark.implicits._
     val base = Array.tabulate(64)(i => if (i == 0) 1.0f else 0.0f)
-    val vecs = (0 until 512).map { id =>
-      // identical direction for every vector: cosine 1.0 to every
-      // centroid, keep-1 tie-break sends ALL of them to one cell.
-      // vec_id is INT on purpose: the capped path must normalize the
-      // id width before the packed-pair expressions (array<bigint>)
-      (id, base.toSeq, id % 10)
-    }.toDF("vec_id", "embedding", "label")
+    // vec_id is INT on purpose: semdedup normalizes the id width
+    val vecs = (0 until 512).map(id => (id, base.toSeq, id % 10))
+      .toDF("vec_id", "embedding", "label")
     val dir = java.nio.file.Files
       .createTempDirectory("graft_semdedup_hot").toString
     try {
       vecs.write.parquet(s"$dir/embeddings.parquet")
-      val assigned = LlmVectorOps.semdedupAssigned(spark, dir)
-      val cells = assigned.groupBy("cent_id").count().collect()
+      val cells = LlmVectorOps.semdedupAssigned(spark, dir)
+        .groupBy("cent_id").count().collect()
       assert(cells.map(_.getLong(1)).max >= 256L,
         "the constructed corpus must actually have a viral cell")
-      // the same width normalization semdedup's capped path applies
-      // (vec_id is INT here, the packed form type-checks array<bigint>)
-      val members = assigned.select(
-        org.apache.spark.sql.functions.col("cent_id"),
-        org.apache.spark.sql.functions.col("vec_id").cast("long")
-          .as("vec_id"))
-      // AQE's tiny-partition coalescing would re-merge the split
-      // chunks at TEST scale (the HotBucketSpec caveat) — pin the
-      // spread with coalescing off
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
-        "false")
-      val perTask =
-        try graft.engine.Pairs
-          .explodedPairsFromMembers(spark, members, Seq("cent_id"),
-            "vec_id", wide = false, hotCap = 64, groups = 16)
-          .select(org.apache.spark.sql.functions.spark_partition_id()
-            .as("pid"))
-          .groupBy("pid").count()
-          .collect().map(_.getLong(1))
-        finally spark.conf.unset(
-          "spark.sql.adaptive.coalescePartitions.enabled")
-      val total = perTask.sum
-      assert(total >= 512L * 511L / 2L, s"pair stream too small: $total")
-      assert(perTask.length >= 3,
-        s"quadratic work not spread: ${perTask.toSeq}")
-      assert(perTask.max <= total / 2,
-        s"one task still owns the viral cell: max=${perTask.max} of " +
-          s"$total across ${perTask.length} tasks")
-      // and the capped query still equals the uncapped on this corpus
-      val off = LlmVectorOps.semdedup(spark, dir).collect()
-        .map(_.toString).toSeq
-      spark.conf.set(LlmVectorOps.SemDedupHotCellCapConf, "64")
-      try assert(LlmVectorOps.semdedup(spark, dir).collect()
-        .map(_.toString).toSeq == off)
-      finally spark.conf.unset(LlmVectorOps.SemDedupHotCellCapConf)
+      val removed = LlmVectorOps.semdedup(spark, dir)
+        .select("vec_id").collect().map(_.getLong(0)).toSeq
+      assert(removed == (1L until 512L))
     } finally org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(dir))
   }

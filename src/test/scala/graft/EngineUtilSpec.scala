@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -125,19 +125,32 @@ class EngineUtilSpec extends AnyFunSuite {
     // the wide-id fallback must be a pure representation change: on an
     // id space BOTH forms can hold, distinct and counted pair
     // generation agree exactly (random posting lists, dupes included)
-    val rnd = new scala.util.Random(23)
-    val lists = Seq.fill(40)(
-      Seq.fill(1 + rnd.nextInt(6))(rnd.nextInt(30).toLong).distinct)
-      .map(Tuple1(_)).toDF("ds")
-    def pairsOf(wide: Boolean) =
+    def pairsOf(lists: DataFrame, wide: Boolean) =
       graft.engine.Pairs.distinctPairs(spark, lists, "ds", wide)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairsOf(wide = true) == pairsOf(wide = false))
-    assert(pairsOf(wide = false).nonEmpty)
-    def countsOf(wide: Boolean) =
+    def countsOf(lists: DataFrame, wide: Boolean) =
       graft.engine.Pairs.countedPairs(spark, lists, "ds", "cnt", wide)
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(countsOf(wide = true) == countsOf(wide = false))
+    val rnd = new scala.util.Random(23)
+    val random = Seq.fill(40)(
+      Seq.fill(1 + rnd.nextInt(6))(rnd.nextInt(30).toLong).distinct)
+      .map(Tuple1(_)).toDF("ds")
+    // adversarial skew: one viral bucket of 200 ids, a mid bucket
+    // inside it (ids 150..189 co-occur twice) and 20 cold 3-member
+    // buckets
+    val skewed = ((0L until 200L).map(id => (0L, id))
+      ++ (150L until 190L).map(id => (1L, id))
+      ++ (0L until 60L).map(id => (100L + id % 20, 200L + id)))
+      .toDF("bh", "doc_id")
+      .groupBy("bh").agg(collect_list("doc_id").as("ds"))
+    for (lists <- Seq(random, skewed)) {
+      assert(pairsOf(lists, wide = true) == pairsOf(lists, wide = false))
+      assert(countsOf(lists, wide = true) == countsOf(lists, wide = false))
+    }
+    assert(pairsOf(random, wide = false).nonEmpty)
+    // viral C(200,2) ∪ mid C(40,2) (a subset) ∪ 20 × C(3,2)
+    assert(pairsOf(skewed, wide = false).size == 200 * 199 / 2 + 20 * 3)
+    assert(countsOf(skewed, wide = false)((150L, 151L)) == 2L)
   }
 
   test("muSigma: flat groups get sigma EXACTLY 0, never NaN from cancellation") {
