@@ -1,4 +1,7 @@
 package graft
+
+import scala.util.control.NonFatal
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -38,7 +41,7 @@ object Bench {
             new java.io.File(idxBase, new java.io.File(d).getName).getPath)
         }
       spark.conf.set(operators.LlmVectorOps.AnnIndexConf, idxBase)
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] ANN index build failed ($e) — " +
         "PQ rows will train inline") }
     try {
@@ -46,7 +49,7 @@ object Bench {
       if (warmSibling.isDirectory)
         SparkEntry.queries.foreach { case (name, fn) =>
           try fn(spark, warmSibling.getPath).count()
-          catch { case e: Throwable =>
+          catch { case NonFatal(e) =>
             System.err.println(s"[bench] warm $name failed: $e") }
         }
       else
@@ -56,7 +59,7 @@ object Bench {
         System.err.println(
           s"[bench] no sf0.001 sibling next to $sfDir — skipping " +
             "full-suite codegen warm pass (JVM-only warm-up)")
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] warm-up failed: $e") }
     // dev knobs: SPARK_GRAFT_QUERIES comma-list filters the set;
     // SPARK_GRAFT_REPS repeats each query and keeps the per-query
@@ -88,7 +91,7 @@ object Bench {
         val times = (1 to reps).map { _ =>
           val t0 = System.nanoTime()
           val ok = try { fn(spark, sfDir).count(); true }
-                   catch { case e: Throwable =>
+                   catch { case NonFatal(e) =>
                      System.err.println(s"[bench] $name failed: $e"); false }
           if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
         }
@@ -142,7 +145,7 @@ object Bench {
       try java.nio.file.Files.write(
         java.nio.file.Paths.get(s"bench_$sfName.json"),
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] could not write bench_$sfName.json: $e") }
     spark.stop()
   }

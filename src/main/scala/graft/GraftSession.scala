@@ -4,15 +4,26 @@ import org.apache.spark.sql.SparkSession
 
 /** Library entry point: a session builder with the engine's canonical
   * configuration — UTC semantics (oracle parity), AQE on, the graft
-  * SQL functions registered, and shuffle parallelism sized to the
-  * cluster instead of Spark's 200-partition default.
+  * SQL functions registered, shuffle parallelism sized to the cluster
+  * instead of Spark's 200-partition default, and `file:` paths served
+  * by the fork-free local filesystem.
   */
 object GraftSession {
+
+  /** `file:` paths through [[graft.engine.ForklessLocalFs]], for both
+    * the `FileSystem` API and the `FileContext` API that streaming
+    * checkpoints use. Other schemes keep Hadoop's defaults. */
+  val localFsConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" ->
+      classOf[graft.engine.ForklessLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+      classOf[graft.engine.ForklessLocalFs].getName)
 
   /** Pre-configured builder; caller adds master/appName and builds. */
   def builder(shufflePartitions: Int = Runtime.getRuntime.availableProcessors())
       : SparkSession.Builder =
     SparkSession.builder()
+      .config(localFsConf)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)

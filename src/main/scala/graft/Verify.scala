@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import scala.util.control.NonFatal
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -41,8 +44,9 @@ object Verify {
       deleteRec(new java.io.File(s"$outDir/$name"))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      catch { case NonFatal(e) =>
+        System.err.println(s"[verify] $name failed: ${e.getClass.getName}: " +
+          s"${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -63,9 +67,9 @@ object Verify {
     // the rows-only check instead of sinking the whole dump
     val dynamic =
       try SparkEntry.dynamicOracleSql(spark, sfDir)
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] dynamic oracle generation failed: " +
-          s"${e.getMessage}")
+          s"${e.getClass.getName}: ${e.getMessage}")
         Map.empty[String, String]
       }
     val json = (SparkEntry.oracleSql ++ dynamic)

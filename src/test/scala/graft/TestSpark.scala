@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test JVM (Test / fork := true). */
+/** One shared local session for the whole test JVM (Test / fork := true),
+  * on the local filesystem `GraftSession` installs but otherwise plain:
+  * no extensions, so `GraftExtensionsSpec` sees a bare function registry. */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -11,6 +13,7 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.localFsConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
