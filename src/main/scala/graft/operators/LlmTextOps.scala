@@ -396,10 +396,8 @@ object LlmTextOps {
     * ⌈0.8k⌉ is computed as (4k+4) div 5 in INTEGER arithmetic: float
     * 0.8*k rounds UP at e.g. k=15 (12.000000000000002 → ceil 13),
     * silently shortening the prefix and dropping true pairs.
-    * `private[graft]` so tools measuring the prefix work unit
-    * (ScaleSweep) index the EXACT prefix the operator runs.
     */
-  private[graft] val PrefixSliceSql =
+  private val PrefixSliceSql =
     "slice(sort_array(hs), 1, size(hs) - CAST((4 * size(hs) + 4) DIV 5 AS INT) + 1)"
 
   def dedupNearPrefix(s: SparkSession, d: String): DataFrame = {
@@ -466,9 +464,10 @@ object LlmTextOps {
   /** Pair-stream budget (second routing axis of [[dedupNearAuto]]):
     * even at small k the counted form's FULL pair stream grows
     * ~quadratically with corpus size once the shingle space saturates
-    * (ScaleSweep measured 1.3M pairs at 5k docs → 130M at 50k, a tie
-    * → 3.2× prefix win on wall), so past this many estimated pairs
-    * the pruned stream wins regardless of document length. 10M sits
+    * (1.3M pairs at 5k docs → 130M at 50k, a tie → 3.2× prefix win
+    * on wall; BASELINE.md, "Round-5 scale curve"), so past this many
+    * estimated pairs the pruned stream wins regardless of document
+    * length. 10M sits
     * safely above the measured tie zone (~1M) and well below the
     * measured flip (130M).
     */
@@ -486,9 +485,9 @@ object LlmTextOps {
     *    P² / (2·B̂) (P = total postings, B̂ = approx-distinct shingles;
     *    uniform-occupancy estimate — within 4% of the exact Σ C(k,2)
     *    on both measured corpora) and take prefix past the budget —
-    *    the corpus-size crossover ScaleSweep measured (skewed posting
-    *    lists make the true mass larger, i.e. the estimate errs
-    *    toward the form that degrades gracefully).
+    *    the corpus-size crossover in BASELINE.md's "Round-5 scale
+    *    curve" (skewed posting lists make the true mass larger, i.e.
+    *    the estimate errs toward the form that degrades gracefully).
     */
   /** The one-job corpus stats record both routing dials read:
     * `p` = total postings (Σ distinct shingles over docs), `n` =
@@ -976,11 +975,11 @@ object LlmTextOps {
   private[graft] val minhashBands = 8 // 4 rows/band
 
   /** The (doc_id, band, bh) band-bucket membership of a (doc_id, sig)
-    * signature frame — the LSH blocking projection shared by the
-    * candidate join and the ScaleSweep occupancy probe (which
-    * measures exactly the bucket distribution the join shuffles on).
+    * signature frame — the LSH blocking projection the candidate join
+    * shuffles on. Its occupancy at 500k docs (kmax 561, p99 2, mean
+    * 1.053) is in BASELINE.md, "Round-7: compiled hot loops".
     */
-  private[graft] def minhashBandMembers(sigs: DataFrame): DataFrame =
+  private def minhashBandMembers(sigs: DataFrame): DataFrame =
     sigs.select(
       col("doc_id"),
       explode(expr(
@@ -1051,13 +1050,13 @@ object LlmTextOps {
     * Scale: this is the pair source the graph consumers route to past
     * the exact forms' crossover — candidates are O(colliding pairs)
     * off linear banding units, never the Σ C(k,2) posting-list
-    * explosion (ScaleSweep: the exact pair stream grew ~90–102× per
-    * decade and stops terminating around half a million docs; the
-    * banded stream tracks its linear unit). Verification joins the
-    * sorted hash sets per CANDIDATE only (compiled merge-scan
-    * IntersectCount, sets sorted once per doc). Memoized per
-    * (session, corpus) like the exact silver — the same seven-consumer
-    * reuse argument.
+    * explosion (the exact pair stream grew ~90–102× per decade and
+    * stops terminating around half a million docs; BASELINE.md,
+    * "Round 10"; the banded stream tracks its linear unit).
+    * Verification joins the sorted hash sets per CANDIDATE only
+    * (compiled merge-scan IntersectCount, sets sorted once per doc).
+    * Memoized per (session, corpus) like the exact silver — the same
+    * seven-consumer reuse argument.
     */
   private[graft] def minhashVerifiedPairs(s: SparkSession,
       d: String): DataFrame = {
@@ -1101,12 +1100,13 @@ object LlmTextOps {
     * (approx) shingle-bearing documents. Below it the exact
     * co-occurrence silver is cheap and shared with the dedup_near
     * family; above it the Σ C(k,2) posting-list pair stream is the
-    * measured scale-killer (ScaleSweep: ~90–102×/decade growth,
-    * non-terminating around half a million docs on the synthesized
-    * corpus) and the banded-MinHash source takes over. 100k sits a
+    * measured scale-killer (~90–102×/decade growth, non-terminating
+    * around half a million docs on the synthesized corpus; BASELINE.md,
+    * "Round 10") and the banded-MinHash source takes over. 100k sits a
     * decade past the largest corpus where the exact stream was
     * comfortable (50k docs: 130M pairs, a measured tie) and at the
-    * size where ScaleSweep stopped sweeping the exact forms.
+    * size where the synthesized sweep stopped measuring the exact
+    * forms (BASELINE.md, "Round-7: compiled hot loops").
     */
   private[graft] val PairSourceCrossoverDocs = 100000L
 
@@ -1307,8 +1307,9 @@ object LlmTextOps {
 
   /** Distinct candidate-pair count BEFORE the Hamming filter at a
     * given block depth — the engine-independent work unit behind the
-    * scale-curve table (ScaleSweep publishes it for the fixed and
-    * scaled depths side by side).
+    * scale-curve tables (BASELINE.md, "Round-6" SimHash candidate-mass
+    * dial and "Round-7: compiled hot loops", fixed and scaled depths
+    * side by side).
     */
   private[graft] def simhashCandidateMass(sigs: DataFrame, sigBits: Int,
       nBlocks: Int, maxHamming: Int): Long = {
@@ -2626,10 +2627,11 @@ object LlmTextOps {
   /** Which aligner input [[substringRuns]]' auto route picks — same
     * memoized stats job and the same measured crossover as
     * [[pairSourceRoute]]: the aligner's window-posting pair stream is
-    * the dedup_near posting-list unit (ScaleSweep: ~90–102×/decade,
-    * non-terminating around half a million docs), so the doc count
-    * where the exact pair silver stops being safe is the doc count
-    * where the exact window explode stops being safe.
+    * the dedup_near posting-list unit (~90–102×/decade,
+    * non-terminating around half a million docs; BASELINE.md,
+    * "Round 10"), so the doc count where the exact pair silver stops
+    * being safe is the doc count where the exact window explode stops
+    * being safe.
     */
   private[graft] def substrSourceRoute(s: SparkSession, d: String): String =
     if (corpusPairStats(s, d).n >= PairSourceCrossoverDocs) "minhash"

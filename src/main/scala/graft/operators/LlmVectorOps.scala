@@ -400,9 +400,10 @@ object LlmVectorOps {
     * probe, so the candidate mass is ≈ n · nprobe · [[ivfStride]] —
     * LINEAR in n at fixed nprobe, vs the exact scan's n². Edge
     * recall is corpus-dependent: on clustered encoder output modest
-    * nprobe recovers the true edges (ScaleSweep's mixture corpus:
-    * measured recall + timing per decade), while on the shipped
-    * ISOTROPIC fixture vectors no sublinear candidate source can
+    * nprobe recovers the true edges (clustered mixture corpus: recall
+    * and timing per decade in BASELINE.md, "Round 11" and "Round 12"
+    * routed kNN tables), while on the shipped ISOTROPIC fixture
+    * vectors no sublinear candidate source can
     * (measured: 18% of true top-3 edges at nprobe=1 and sf0.1, 100%
     * only when every list is probed — curse of dimensionality, not
     * an implementation gap). That is exactly why `auto` keeps small
@@ -423,12 +424,12 @@ object LlmVectorOps {
 
   /** Vector-count crossover for [[KnnSourceConf]]'s auto route. The
     * exact scan is n²·d fused multiply-adds with no materialized pair
-    * rows — measured comfortable through 32k vectors (ScaleSweep) —
-    * while its broadcast corpus array grows linearly (~32k·64·4 B ≈
-    * 8 MiB at the crossover; past it the broadcast and the n² dots
-    * both stop scaling). 32768 sits at the last measured-comfortable
-    * decade, one step before the 128k corpus where the routed build
-    * is demonstrably ahead.
+    * rows — measured comfortable through 32k vectors (BASELINE.md,
+    * "Round 11" routed kNN table) — while its broadcast corpus array
+    * grows linearly (~32k·64·4 B ≈ 8 MiB at the crossover; past it
+    * the broadcast and the n² dots both stop scaling). 32768 sits at
+    * the last measured-comfortable decade, one step before the 128k
+    * corpus where the routed build is demonstrably ahead.
     */
   private[graft] val KnnSourceCrossoverVecs = 32768L
 
@@ -3623,7 +3624,8 @@ object LlmVectorOps {
   /** [[dedupEmbedBlockedFrom]] with the hyperplane depth exposed: the
     * bucket count per table is 2^kPlanes, FIXED — so candidate volume
     * scales as L·n²/2^kPlanes and a constant k quietly re-quadratizes
-    * at scale (ScaleSweep measured 6.6× wall for 4× vectors at k=4).
+    * at scale (measured 6.6× wall for 4× vectors at k=4; BASELINE.md's
+    * "Round-5 scale curve" reads 8.2× on its sweep).
     * The 100 TB rule is k ≈ log₂(n/targetOccupancy): bucket occupancy
     * — and with it pair mass per vector — stays constant. For true
     * near-dups (cos ≥ 0.9, collision p ≈ 0.92/plane) deeper tables

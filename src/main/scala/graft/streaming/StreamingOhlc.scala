@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.ReferenceOps.{hourlyRow, ohlcColumns}
 
-/** Streaming twins of the reference pipeline (SURVEY.md §2.2 S1/S3/S4/S6).
+/** Streaming twins of the reference pipeline (SURVEY.md §2.2 S1/S4/S6).
   *
   * The reference is a hand-rolled streaming job: a 5 s poll loop
   * (`dataCollector.py:17,220`), per-symbol in-memory OHLC state
@@ -16,7 +16,8 @@ import graft.operators.ReferenceOps.{hourlyRow, ohlcColumns}
   * (`dataCollector.py:166-175`). Here that is Structured Streaming:
   * the same *logical* aggregation as the batch `ohlc_hourly`, with the
   * state store, window close, and late-data policy supplied by the
-  * engine instead of hand-rolled.
+  * engine instead of hand-rolled. Gap-based sessionization is S24,
+  * `StreamingSessions.sessionStream`.
   */
 object StreamingOhlc {
 
@@ -45,22 +46,6 @@ object StreamingOhlc {
       .groupBy(window(col("ts"), "1 hour"), col("symbol"))
       .agg(ohlcColumns.head, ohlcColumns.tail: _*)
       .select(hourlyRow(col("window.start")): _*)
-
-  /** S3 `streaming_sessionize` — gap-based session windows on a
-    * stream: the E16 batch sessionization as a native
-    * `session_window` aggregation (30 min gap), emitting one row per
-    * closed session once the watermark passes its end.
-    */
-  def sessionizeStream(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(
-        col("user_id"),
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("n_events"))
 
   /** S4 `streaming_dedup` — exactly-once tick landing on an
     * at-least-once transport: drop duplicate (symbol, ts) keys with

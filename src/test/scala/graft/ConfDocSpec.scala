@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** README's "Session configuration" table is the whole list of
   * settable engine knobs: it must name exactly the `spark.graft.*`
   * keys the code reads, and no `graft.*` JVM system property may
-  * change behaviour behind it.
+  * change behaviour behind it. The same scan of `src/main` pins the
+  * program's entry points and forbids a catch-all that drops the
+  * error.
   */
 class ConfDocSpec extends AnyFunSuite {
   private val root = new File(sys.props("user.dir"))
@@ -53,5 +55,52 @@ class ConfDocSpec extends AnyFunSuite {
       PropRead.findAllMatchIn(text).map(m => s"${f.getName}: ${m.matched}")
     }
     assert(reads.isEmpty, reads.mkString("; "))
+  }
+
+  test("the only entry points in src/main are Bench, Verify and ExplainPlans") {
+    val Package = """(?m)^package\s+([\w.]+)""".r
+    val Object = """\bobject\s+(\w+)""".r
+    val Main = """\bdef\s+main\s*\(|\bextends\s+App\b""".r
+    val entries = mainSources.flatMap { case (_, text) =>
+      val pkg = Package.findFirstMatchIn(text).map(_.group(1) + ".")
+        .getOrElse("")
+      Main.findAllMatchIn(text).map { m =>
+        val owner = Object.findAllMatchIn(text.take(m.start)).toSeq
+          .lastOption.map(_.group(1)).getOrElse("?")
+        pkg + owner
+      }
+    }
+    assert(entries.sorted ==
+      Seq("graft.Bench", "graft.Verify", "graft.tools.ExplainPlans"),
+      entries.mkString("; "))
+  }
+
+  test("every catch of Throwable in src/main rethrows what it caught") {
+    val CatchAll = """\bcase\s+(\w+)\s*:\s*(?:java\.lang\.)?Throwable\s*=>""".r
+    // the handler runs to the next case or the end of its catch block
+    def handler(text: String, from: Int): String = {
+      var depth = 0
+      var i = from
+      while (i < text.length && depth >= 0 &&
+        !(depth == 0 && text.startsWith("case ", i))) {
+        if (text(i) == '{') depth += 1
+        else if (text(i) == '}') depth -= 1
+        i += 1
+      }
+      text.substring(from, i)
+    }
+    val sites = mainSources.flatMap { case (f, text) =>
+      CatchAll.findAllMatchIn(text).map { m =>
+        val line = text.take(m.start).count(_ == '\n') + 1
+        (s"${f.getName}:$line", m.group(1), handler(text, m.end))
+      }
+    }
+    val dropped = sites.collect {
+      case (at, name, body)
+          if name == "_" || s"\\bthrow\\s+$name\\b".r.findFirstIn(body).isEmpty =>
+        at
+    }
+    assert(dropped.isEmpty,
+      s"Throwable caught and not rethrown at: ${dropped.mkString(", ")}")
   }
 }

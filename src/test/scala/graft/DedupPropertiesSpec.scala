@@ -103,7 +103,7 @@ class DedupPropertiesSpec extends AnyFunSuite {
       rows(LlmTextOps.dedupNear(spark, sf)))
     // the second routing axis: with the pair-stream budget forced to
     // 1, the SAME corpus must route prefix (the corpus-size crossover
-    // ScaleSweep measured at ~10M estimated pairs)
+    // at ~10M estimated pairs; BASELINE.md, "Round-5 scale curve")
     assert(LlmTextOps.nearDupJoinForm(spark, sf, pairStreamBudget = 1L)
       == "prefix")
 

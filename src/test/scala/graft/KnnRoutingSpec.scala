@@ -15,7 +15,8 @@ import graft.operators.LlmVectorOps
   * poor BY MEASUREMENT (18% at nprobe=1, sf0.1 — no sublinear
   * candidate source does better on clusterless data), which is why
   * auto pins small corpora to the exact scan; the clustered-corpus
-  * recall story lives in ScaleSweep.
+  * recall story is in BASELINE.md's "Round 11" and "Round 12" routed
+  * kNN tables.
   */
 class KnnRoutingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark

@@ -191,34 +191,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("S3 streaming_sessionize: session closes after 30 min gap, one row per session") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val in = MemoryStream[Tick]
-    val events = in.toDF().withColumnRenamed("symbol", "user")
-      .selectExpr("ts", "CAST(1 AS BIGINT) AS user_id", "price")
-    val q = StreamingOhlc.sessionizeStream(events)
-      .writeStream.format("memory").queryName("s3_out")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // session A: two events 5 min apart; then 40 min silence; session B
-      in.addData(
-        Tick(ts("2024-01-01 10:00:00"), "u", 1.0),
-        Tick(ts("2024-01-01 10:05:00"), "u", 1.0),
-        Tick(ts("2024-01-01 10:45:00"), "u", 1.0))
-      q.processAllAvailable()
-      // push watermark far past both sessions
-      in.addData(Tick(ts("2024-01-01 13:00:00"), "u", 1.0))
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT * FROM s3_out ORDER BY session_start")
-        .collect()
-      assert(rows.length == 2)
-      assert(rows(0).getAs[Long]("n_events") == 2L) // 10:00 + 10:05
-      assert(rows(0).getAs[Timestamp]("session_end") == ts("2024-01-01 10:35:00"))
-      assert(rows(1).getAs[Long]("n_events") == 1L) // 10:45
-    } finally q.stop()
-  }
-
   test("S4 streaming_dedup: duplicate (symbol, ts) dropped within watermark") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -1700,14 +1672,19 @@ class StreamingSpec extends AnyFunSuite {
         (ts("2024-01-01 10:10:00"), 1L),
         (ts("2024-01-01 10:50:00"), 1L),
         // user 2: a single event (bounce)
-        (ts("2024-01-01 10:05:00"), 2L))
+        (ts("2024-01-01 10:05:00"), 2L),
+        // user 3: two events 5 min apart, a 40-min gap, then one event
+        (ts("2024-01-01 10:00:00"), 3L),
+        (ts("2024-01-01 10:05:00"), 3L),
+        (ts("2024-01-01 10:45:00"), 3L))
       q.processAllAvailable()
       // watermark after this batch: 10:50 − 10 min = 10:40, which
       // already passes the gap horizon of user 1's first session
-      // (ends 10:10 + 30 = 10:40) and user 2's (10:35) — both emit;
-      // the 10:50 session (horizon 11:20) stays open
-      assert(spark.sql("SELECT * FROM s24_out").count() == 2,
-        "the two passed-horizon sessions emit, the open one holds")
+      // (ends 10:10 + 30 = 10:40), user 2's (10:35) and user 3's first
+      // (10:35) — all three emit; the 10:50 and 10:45 sessions
+      // (horizons 11:20 and 11:15) stay open
+      assert(spark.sql("SELECT * FROM s24_out").count() == 3,
+        "the three passed-horizon sessions emit, the open ones hold")
       // advance event time far past every session's gap horizon
       in.addData((ts("2024-01-01 14:00:00"), 99L))
       q.processAllAvailable()
@@ -1718,8 +1695,15 @@ class StreamingSpec extends AnyFunSuite {
       assert(rows == Seq(
         (1L, 2L, 600L), // 10:00-10:10 run merged into one session
         (1L, 1L, 0L),   // the 10:50 event, gap 40 min > 30
-        (2L, 1L, 0L)),  // bounce
+        (2L, 1L, 0L),   // bounce
+        (3L, 2L, 300L), // 10:00 + 10:05
+        (3L, 1L, 0L)),  // 10:45, after the 40-min gap
         s"sessions diverged: $rows")
+      val user3End = spark.sql(
+        "SELECT session_end FROM s24_out WHERE user_id = 3 AND n_events = 2")
+        .collect().map(_.getAs[Timestamp](0)).toSeq
+      assert(user3End == Seq(ts("2024-01-01 10:35:00")),
+        "a session ends one gap after its last event")
     } finally q.stop()
   }
 
